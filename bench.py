@@ -1786,11 +1786,9 @@ def run_snap(n: int = 20_000_000, m: int = 200_000) -> dict:
     snapped = joins.snap_join(pts, segs, max_d, world).count()
     wall = time.time() - t0
     skew = _stage_skew()
-    depth, ncell, sx, sy, _ = joins._ring_grid(world, max_d, None,
-                                               who="run_snap")
-    p_cells = pts.select(
-        joins._gcoord(F.col("px"), 0.0, sx, ncell).alias("cell_x"),
-        joins._gcoord(F.col("py"), 0.0, sy, ncell).alias("cell_y"))
+    depth = joins._ring_grid(world, max_d, None, who="run_snap")[0]
+    cx, cy = joins._cell_sql(world, depth, "px", "py")
+    p_cells = pts.selectExpr(f"{cx} AS cell_x", f"{cy} AS cell_y")
     s_cells = explode_covering_cells(
         segs.withColumn("_s_min_x", F.least("x1", "x2") - max_d)
         .withColumn("_s_min_y", F.least("y1", "y2") - max_d)
@@ -1841,12 +1839,10 @@ def run_st(n: int = 20_000_000) -> dict:
     pairs = joins.st_pair_join(ev, d, t, world).count()
     wall = time.time() - t0
     skew = _stage_skew()
-    depth, ncell, sx, sy, _ = joins._ring_grid(world, d, None,
-                                               who="run_st")
-    keys = ev.select(
-        joins._gcoord(F.col("x"), 0.0, sx, ncell).alias("cell_x"),
-        joins._gcoord(F.col("y"), 0.0, sy, ncell).alias("cell_y"),
-        F.expr(f"tsec div {t}").alias("tb"))
+    depth = joins._ring_grid(world, d, None, who="run_st")[0]
+    cx, cy = joins._cell_sql(world, depth, "x", "y")
+    keys = ev.selectExpr(
+        f"{cx} AS cell_x", f"{cy} AS cell_y", f"tsec div {t} AS tb")
     hist = keys.groupBy("cell_x", "cell_y", "tb").count().agg(
         F.count("*").alias("keys"),
         F.expr("percentile_approx(count, 0.5)").alias("p50"),

@@ -19,6 +19,9 @@ The reference's trees become columns here:
   y, then z — DynamicOctree.hpp:56-65,87-94), closed containment.
 - ``kring_offsets``: 3x3 (2D) / 27-cell (3D) neighbor rings
   (WorldPartition.hpp:194-213) for kNN candidate generation.
+- ``grid_cell_sql``: the clamped fixed-depth grid cell index, as Spark
+  SQL text — the equi-join key of every cell-mode join and of
+  operators.tiling.explode_covering_cells.
 
 Everything is float64; midpoints are computed by recursive halving
 (min + (max-min)*0.5, matching BoundaryBox.hpp:63 / resize()) so the
@@ -118,6 +121,24 @@ def grid_coord(v: Column, world_min: float, world_edge: float, bits: int) -> Col
     n = 1 << bits
     i = F.floor((v - F.lit(world_min)) / F.lit(world_edge) * F.lit(n))
     return F.greatest(F.lit(0), F.least(F.lit(n - 1), i)).cast("long")
+
+
+def grid_cell_sql(v: str, wmin: float, s: float, n: int) -> str:
+    """Spark SQL text of the clamped cell index of the SQL expression
+    ``v`` on an n-cell axis starting at ``wmin`` with cell edge ``s``:
+    greatest(0, least(n - 1, floor((v - wmin) / s))) cast to INT, so
+    out-of-world coordinates land in the edge cells.
+
+    Why text rather than a Column tree: every F.col / F.lit / F.floor /
+    F.greatest / arithmetic / cast node is at least one Py4J round trip
+    (plus a captured call site), about a dozen per cell index, while a
+    selectExpr / F.expr / filter string is parsed JVM-side in ONE round
+    trip. Plan construction of the cell joins was dominated by those
+    round trips. The parsed expression is the same tree, so the
+    physical plan does not change. wmin and s are written as DOUBLE
+    literals (``1024.0D``): a bare ``1024.0`` parses as DECIMAL."""
+    return (f"CAST(greatest(0, least({n - 1}, "
+            f"floor(({v} - {float(wmin)!r}D) / {float(s)!r}D))) AS INT)")
 
 
 def coarse_cell(x: Column, z: Column, cell: float) -> tuple[Column, Column]:

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from ..config import Box2
 from ..functions import geometry as G
+from ..functions.cells import grid_cell_sql
 from .tiling import explode_covering_cells
 
 
@@ -44,8 +45,20 @@ def _grid(world: Box2, depth: int) -> tuple[int, float, float]:
     return n, (world.max_x - world.min_x) / n, (world.max_y - world.min_y) / n
 
 
-def _gcoord(v: Column, wmin: float, s: float, n: int) -> Column:
-    return F.greatest(F.lit(0), F.least(F.lit(n - 1), F.floor((v - wmin) / s))).cast("int")
+def _cell_sql(world: Box2, depth: int, x: str, y: str) -> tuple[str, str]:
+    """(cell_x, cell_y) SQL text of the point (x, y) on the depth grid."""
+    n, sx, sy = _grid(world, depth)
+    return (grid_cell_sql(x, world.min_x, sx, n),
+            grid_cell_sql(y, world.min_y, sy, n))
+
+
+def _report_sql(world: Box2, depth: int, a: tuple[str, str], b: tuple[str, str]) -> str:
+    """Reporting-cell gate of the box-explode joins: the overlap
+    region's min corner — greatest of the two boxes' (min_x, min_y)
+    columns ``a`` and ``b`` — lies in the row's (cell_x, cell_y)."""
+    rx, ry = _cell_sql(world, depth, f"greatest({a[0]}, {b[0]})",
+                       f"greatest({a[1]}, {b[1]})")
+    return f"{rx} = cell_x AND {ry} = cell_y"
 
 
 def pip_join(
@@ -84,23 +97,14 @@ def range_join(
     corner, so no dedup pass is needed. Expected candidates per cell
     stay O(density); the equi-join shuffles on (cell_x, cell_y).
     """
-    n, sx, sy = _grid(world, depth)
-    o = explode_covering_cells(
-        objects.select(
-            F.col("obj_id"),
-            F.col("min_x").alias("o_min_x"), F.col("min_y").alias("o_min_y"),
-            F.col("max_x").alias("o_max_x"), F.col("max_y").alias("o_max_y"),
-        ),
-        world, depth, "o_min_x", "o_min_y", "o_max_x", "o_max_y",
-    )
-    q = explode_covering_cells(
-        queries.select(
-            F.col("query_id"),
-            F.col("min_x").alias("q_min_x"), F.col("min_y").alias("q_min_y"),
-            F.col("max_x").alias("q_max_x"), F.col("max_y").alias("q_max_y"),
-        ),
-        world, depth, "q_min_x", "q_min_y", "q_max_x", "q_max_y",
-    )
+    def side(df: DataFrame, key: str, p: str) -> DataFrame:
+        box = ("min_x", "min_y", "max_x", "max_y")
+        return explode_covering_cells(
+            df.selectExpr(key, *[f"{c} AS {p}_{c}" for c in box]),
+            world, depth, *[f"{p}_{c}" for c in box])
+
+    o = side(objects, "obj_id", "o")
+    q = side(queries, "query_id", "q")
     qbox = G.BoxCols("q_min_x", "q_min_y", "q_max_x", "q_max_y")
     obox = G.BoxCols("o_min_x", "o_min_y", "o_max_x", "o_max_y")
     if convention == "rect":
@@ -109,12 +113,7 @@ def range_join(
         pred = G.overlaps(qbox, obox)
     joined = q.join(o, ["cell_x", "cell_y"]).filter(pred)
     # reporting-cell dedup: overlap-region min corner must lie in this cell
-    rx = F.greatest(F.col("q_min_x"), F.col("o_min_x"))
-    ry = F.greatest(F.col("q_min_y"), F.col("o_min_y"))
-    report = (
-        (_gcoord(rx, world.min_x, sx, n) == F.col("cell_x"))
-        & (_gcoord(ry, world.min_y, sy, n) == F.col("cell_y"))
-    )
+    report = _report_sql(world, depth, ("q_min_x", "q_min_y"), ("o_min_x", "o_min_y"))
     return joined.filter(report).drop("cell_x", "cell_y")
 
 
@@ -188,12 +187,11 @@ def polygon_join(
     elif method == "cells":
         if world is None:
             raise ValueError("method='cells' needs a world box")
-        n, sx, sy = _grid(world, depth)
         pc = explode_covering_cells(
             polys, world, depth, "_bx0", "_by0", "_bx1", "_by1")
-        pt = points.withColumn(
-            "cell_x", _gcoord(F.col("x"), world.min_x, sx, n)
-        ).withColumn("cell_y", _gcoord(F.col("y"), world.min_y, sy, n))
+        cx, cy = _cell_sql(world, depth, "x", "y")
+        pt = points.withColumn("cell_x", F.expr(cx)) \
+            .withColumn("cell_y", F.expr(cy))
         out = pt.join(pc, ["cell_x", "cell_y"]).filter(in_box & in_poly) \
             .drop("cell_x", "cell_y")
     else:
@@ -214,7 +212,7 @@ def _ring_grid(world: Box2, d: int, depth: int | None,
 
     depth=None auto-picks floor(log2(min_extent / d)) clamped to
     [0, 12] so cell_edge lands in [d, 2d) and r=1. r is then clamped
-    to n-1: _gcoord clamps coordinates into [0, n-1], so ring offsets
+    to n-1: grid_cell_sql clamps coordinates into [0, n-1], so ring offsets
     with |dx| >= n can never equi-match any real cell — dropping them
     changes nothing and keeps the auto path valid even when d exceeds
     the world extent (depth 0, one cell, r=0: the exact d^2 predicate
@@ -226,6 +224,8 @@ def _ring_grid(world: Box2, d: int, depth: int | None,
             math.log2(max(ext / max(d, 1), 1.0))))))
     n, sx, sy = _grid(world, depth)
     r = min(int(-(-d // min(sx, sy))), n - 1)  # ceil, clamped to grid
+    # spatial ring only: st_pair_join's x3 time-bucket ring is not
+    # counted, so its real fan-out is ~1.5x this (half-space explode)
     fanout = (2 * r + 1) ** 2
     if fanout > max_fanout:
         raise ValueError(
@@ -265,7 +265,9 @@ def distance_join(
     (2r+1)^2 — so the fan-out is guarded like the LSH bucket cap
     (dedup.minhash_lsh_pairs max_bucket_rows): exceeding `max_fanout`
     raises instead of silently shuffling r^2 copies."""
-    depth, n, sx, sy, r = _ring_grid(world, d, depth, max_fanout)
+    depth, _, _, _, r = _ring_grid(world, d, depth, max_fanout)
+    acx, acy = _cell_sql(world, depth, "ax", "ay")
+    bcx, bcy = _cell_sql(world, depth, "bx", "by")
     # coords cast to long: the d^2 residual squares coordinate deltas,
     # which overflows 32-bit inputs under ANSI mode (the driver's
     # default session) — the cast keeps the operator exact for any
@@ -274,16 +276,15 @@ def distance_join(
         F.col(id_col).alias("id_a"),
         F.col("x").cast("long").alias("ax"),
         F.col("y").cast("long").alias("ay"),
-    ).withColumn("cell_x", _gcoord(F.col("ax"), world.min_x, sx, n)) \
-     .withColumn("cell_y", _gcoord(F.col("ay"), world.min_y, sy, n))
+    ).withColumn("cell_x", F.expr(acx)).withColumn("cell_y", F.expr(acy))
     b = (
         points.select(
             F.col(id_col).alias("id_b"),
             F.col("x").cast("long").alias("bx"),
             F.col("y").cast("long").alias("by"),
         )
-        .withColumn("_bcx", _gcoord(F.col("bx"), world.min_x, sx, n))
-        .withColumn("_bcy", _gcoord(F.col("by"), world.min_y, sy, n))
+        .withColumn("_bcx", F.expr(bcx))
+        .withColumn("_bcy", F.expr(bcy))
         .withColumn("_dx", F.explode(F.sequence(F.lit(-r), F.lit(r))))
         .withColumn("_dy", F.explode(F.sequence(F.lit(-r), F.lit(r))))
         .select(
@@ -326,8 +327,10 @@ def st_pair_join(
     {-1,0,1} time-bucket ring (bucket width = t, so a qualifying pair
     differs by <= 1 bucket), candidates meet in ONE 3-column
     equi-shuffle, exact residuals run only on co-located candidates.
-    Fan-out is (2r+1)^2 * 3 — auto depth keeps r=1 (27 copies),
-    guarded by `max_fanout` like distance_join.
+    The half-space explode below makes (3(2r+1)^2 + 1)/2, about
+    1.5x(2r+1)^2, copies per event — auto depth keeps r=1 (14
+    copies). `max_fanout` guards the spatial (2r+1)^2 part like
+    distance_join.
 
     Streaming twin: streaming/cells_stream.streaming_distance_join is
     the stream-stream form of the same semantics (distance band +
@@ -335,8 +338,10 @@ def st_pair_join(
     state-eviction contract."""
     if t < 1:
         raise ValueError("st_pair_join needs t >= 1")
-    depth, n, sx, sy, r = _ring_grid(world, d, depth, max_fanout,
-                                     who="st_pair_join")
+    depth, _, _, _, r = _ring_grid(world, d, depth, max_fanout,
+                                   who="st_pair_join")
+    acx, acy = _cell_sql(world, depth, "ax", "ay")
+    bcx, bcy = _cell_sql(world, depth, "bx", "by")
     # HALF-SPACE explode: of the full (2r+1)^2 x 3 offset cube, the
     # probe side only materializes the zero offset plus the
     # lexicographically-POSITIVE half (first nonzero of (dt, dy, dx)
@@ -363,8 +368,7 @@ def st_pair_join(
         F.col("x").cast("long").alias("ax"),
         F.col("y").cast("long").alias("ay"),
         F.col("tsec").cast("long").alias("ta"),
-    ).withColumn("cell_x", _gcoord(F.col("ax"), world.min_x, sx, n)) \
-     .withColumn("cell_y", _gcoord(F.col("ay"), world.min_y, sy, n)) \
+    ).withColumn("cell_x", F.expr(acx)).withColumn("cell_y", F.expr(acy)) \
      .withColumn("tb", F.expr(f"ta div {int(t)}"))
     b = (
         events.select(
@@ -373,8 +377,8 @@ def st_pair_join(
             F.col("y").cast("long").alias("by"),
             F.col("tsec").cast("long").alias("tbt"),
         )
-        .withColumn("_bcx", _gcoord(F.col("bx"), world.min_x, sx, n))
-        .withColumn("_bcy", _gcoord(F.col("by"), world.min_y, sy, n))
+        .withColumn("_bcx", F.expr(bcx))
+        .withColumn("_bcy", F.expr(bcy))
         .withColumn("_o", F.explode(off_arr))
         .select(
             "id_b", "bx", "by", "tbt", F.col("_o.zero").alias("_zero"),
@@ -436,21 +440,23 @@ def radius_join(
     a pair meets at most once — no dedup pass in either mode."""
     if method not in ("broadcast", "cells"):
         raise ValueError(f"unknown radius_join method {method!r}")
-    depth, n, sx, sy, r = _ring_grid(world, d, depth, max_fanout,
-                                     who="radius_join")
+    depth, _, _, _, r = _ring_grid(world, d, depth, max_fanout,
+                                   who="radius_join")
+    pcx, pcy = _cell_sql(world, depth, "x", "y")
+    qcx, qcy = _cell_sql(world, depth, "qx", "qy")
     p = (
         points
         .withColumn("x", F.col("x").cast("long"))
         .withColumn("y", F.col("y").cast("long"))
-        .withColumn("cell_x", _gcoord(F.col("x"), world.min_x, sx, n))
-        .withColumn("cell_y", _gcoord(F.col("y"), world.min_y, sy, n))
+        .withColumn("cell_x", F.expr(pcx))
+        .withColumn("cell_y", F.expr(pcy))
     )
     q = (
         queries
         .withColumn("qx", F.col("qx").cast("long"))
         .withColumn("qy", F.col("qy").cast("long"))
-        .withColumn("_qcx", _gcoord(F.col("qx"), world.min_x, sx, n))
-        .withColumn("_qcy", _gcoord(F.col("qy"), world.min_y, sy, n))
+        .withColumn("_qcx", F.expr(qcx))
+        .withColumn("_qcy", F.expr(qcy))
         .withColumn("_dx", F.explode(F.sequence(F.lit(-r), F.lit(r))))
         .withColumn("_dy", F.explode(F.sequence(F.lit(-r), F.lit(r))))
         .withColumn("cell_x", F.col("_qcx") + F.col("_dx"))
@@ -513,15 +519,9 @@ def polygon_polygon_join(
         raise ValueError(f"unknown method {method!r}")
     if world is None:
         raise ValueError("method='cells' needs a world box")
-    n, sx, sy = _grid(world, depth)
     ac = explode_covering_cells(a, world, depth, "_ax0", "_ay0", "_ax1", "_ay1")
     bc = explode_covering_cells(b, world, depth, "_bx0", "_by0", "_bx1", "_by1")
-    rx = F.greatest(F.col("_ax0"), F.col("_bx0"))
-    ry = F.greatest(F.col("_ay0"), F.col("_by0"))
-    report = (
-        (_gcoord(rx, world.min_x, sx, n) == F.col("cell_x"))
-        & (_gcoord(ry, world.min_y, sy, n) == F.col("cell_y"))
-    )
+    report = F.expr(_report_sql(world, depth, ("_ax0", "_ay0"), ("_bx0", "_by0")))
     # cheap integer gates FIRST, the O(|A|*|B|) edge-pair fold LAST:
     # conjunct order survives Catalyst (no cost-based reordering), so a
     # pair sharing k cells pays k cheap report/bbox tests but exactly
@@ -562,7 +562,6 @@ def segment_box_join(
         raise ValueError(f"unknown method {method!r}")
     if world is None:
         raise ValueError("method='cells' needs a world box")
-    n, sx, sy = _grid(world, depth)
     s = explode_covering_cells(
         segments
         .withColumn("_s_min_x", F.least("x1", "x2"))
@@ -573,12 +572,7 @@ def segment_box_join(
     )
     q = explode_covering_cells(
         boxes, world, depth, "q_min_x", "q_min_y", "q_max_x", "q_max_y")
-    rx = F.greatest(F.col("_s_min_x"), F.col("q_min_x"))
-    ry = F.greatest(F.col("_s_min_y"), F.col("q_min_y"))
-    report = (
-        (_gcoord(rx, world.min_x, sx, n) == F.col("cell_x"))
-        & (_gcoord(ry, world.min_y, sy, n) == F.col("cell_y"))
-    )
+    report = _report_sql(world, depth, ("_s_min_x", "_s_min_y"), ("q_min_x", "q_min_y"))
     # cheap integer reporting-cell gate BEFORE the SAT fold (same
     # conjunct-ordering rationale as polygon_polygon_join)
     joined = s.join(q, ["cell_x", "cell_y"]).filter(report).filter(pred)
@@ -617,7 +611,6 @@ def segment_segment_join(
         raise ValueError(f"unknown method {method!r}")
     if world is None:
         raise ValueError("method='cells' needs a world box")
-    n, sx, sy = _grid(world, depth)
     a = explode_covering_cells(
         left
         .withColumn("_a_min_x", F.least("ax1", "ax2"))
@@ -634,12 +627,7 @@ def segment_segment_join(
         .withColumn("_b_max_y", F.greatest("by1", "by2")),
         world, depth, "_b_min_x", "_b_min_y", "_b_max_x", "_b_max_y",
     )
-    rx = F.greatest(F.col("_a_min_x"), F.col("_b_min_x"))
-    ry = F.greatest(F.col("_a_min_y"), F.col("_b_min_y"))
-    report = (
-        (_gcoord(rx, world.min_x, sx, n) == F.col("cell_x"))
-        & (_gcoord(ry, world.min_y, sy, n) == F.col("cell_y"))
-    )
+    report = _report_sql(world, depth, ("_a_min_x", "_a_min_y"), ("_b_min_x", "_b_min_y"))
     # cheap integer reporting-cell gate BEFORE the 4-orientation fold
     # (same conjunct ordering as segment_box_join / polygon joins)
     joined = a.join(b, ["cell_x", "cell_y"]).filter(report).filter(pred)
@@ -749,7 +737,7 @@ def snap_candidates_raw(
     once. Works unchanged on a STREAMING points side (both projections
     are stateless; the equi-join against the static exploded segment
     side is a stream-static join)."""
-    depth, n, sx, sy, _ = _ring_grid(world, max_d, depth, who="snap_join")
+    depth = _ring_grid(world, max_d, depth, who="snap_join")[0]
     s = explode_covering_cells(
         segments
         .withColumn("_s_min_x", F.least("x1", "x2") - max_d)
@@ -758,10 +746,8 @@ def snap_candidates_raw(
         .withColumn("_s_max_y", F.greatest("y1", "y2") + max_d),
         world, depth, "_s_min_x", "_s_min_y", "_s_max_x", "_s_max_y",
     ).drop("_s_min_x", "_s_min_y", "_s_max_x", "_s_max_y")
-    p = (
-        points.withColumn("cell_x", _gcoord(F.col("px"), world.min_x, sx, n))
-        .withColumn("cell_y", _gcoord(F.col("py"), world.min_y, sy, n))
-    )
+    cx, cy = _cell_sql(world, depth, "px", "py")
+    p = points.withColumn("cell_x", F.expr(cx)).withColumn("cell_y", F.expr(cy))
     return p.join(s, ["cell_x", "cell_y"])
 
 
@@ -771,10 +757,10 @@ def ring_semi_join(
     """O17: all objects whose cell lies in the Chebyshev-<=k ring around
     each query point's cell (the 3x3 load ring). Objects must carry
     (cell_x, cell_y); queries carry point (x, y)."""
-    n, sx, sy = _grid(world, depth)
+    cx, cy = _cell_sql(world, depth, "x", "y")
     q = (
-        queries.withColumn("_qcx", _gcoord(F.col("x"), world.min_x, sx, n))
-        .withColumn("_qcy", _gcoord(F.col("y"), world.min_y, sy, n))
+        queries.withColumn("_qcx", F.expr(cx))
+        .withColumn("_qcy", F.expr(cy))
         .withColumn("_dx", F.explode(F.sequence(F.lit(-k), F.lit(k))))
         .withColumn("_dy", F.explode(F.sequence(F.lit(-k), F.lit(k))))
         .withColumn("cell_x", F.col("_qcx") + F.col("_dx"))
@@ -835,16 +821,11 @@ def knn_join(
     from pyspark.sql import Window as W
 
     n, sx, sy = _grid(world, depth)
-    o = objects.select(
-        F.col("obj_id"), F.col("x").alias("ox"), F.col("y").alias("oy"),
-        _gcoord(F.col("x"), world.min_x, sx, n).alias("cell_x"),
-        _gcoord(F.col("y"), world.min_y, sy, n).alias("cell_y"),
-    )
-    q0 = queries.select(
-        "query_id", F.col("x").alias("qx"), F.col("y").alias("qy"),
-        _gcoord(F.col("x"), world.min_x, sx, n).alias("qcx"),
-        _gcoord(F.col("y"), world.min_y, sy, n).alias("qcy"),
-    )
+    cx, cy = _cell_sql(world, depth, "x", "y")
+    o = objects.selectExpr(
+        "obj_id", "x AS ox", "y AS oy", f"{cx} AS cell_x", f"{cy} AS cell_y")
+    q0 = queries.selectExpr(
+        "query_id", "x AS qx", "y AS qy", f"{cx} AS qcx", f"{cy} AS qcy")
 
     def ring_candidates(qdf: DataFrame, radius: Column) -> DataFrame:
         keep = [c for c in qdf.columns if c not in ("cell_x", "cell_y")]

@@ -54,8 +54,8 @@ def _int_grid(world: Box2, depth: int) -> tuple[int, int, int]:
     wx = world.max_x - world.min_x
     wy = world.max_y - world.min_y
     ex, ey = wx / n, wy / n
-    if not (world.min_x.is_integer() and world.min_y.is_integer()
-            and ex.is_integer() and ey.is_integer()):
+    # float(): Box2 fields may be ints, and int.is_integer() needs 3.12
+    if not all(float(v).is_integer() for v in (world.min_x, world.min_y, ex, ey)):
         raise ValueError(
             f"union_area needs an integer world with 2^{depth}-divisible "
             f"edges, got {world} (cell edge {ex} x {ey})")

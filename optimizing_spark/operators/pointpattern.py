@@ -88,7 +88,7 @@ def point_pattern(
     )
     nn = sym.groupBy("pid").agg(
         F.min("dist2").alias("nn_d2"),
-        F.first("x").alias("x"), F.first("y").alias("y"))
+        F.min("x").alias("x"), F.min("y").alias("y"))
     rdf = spark.createDataFrame([(r,) for r in radii], "r long")
 
     def interior(r):

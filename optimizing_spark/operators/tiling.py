@@ -146,25 +146,32 @@ def explode_covering_cells(
     .Test/oldQuadTree.cpp:237-253). Grid = 2^depth x 2^depth over world.
 
     Uses explode(sequence(...)) — JVM-side, no UDF. Cell coords clamped
-    to the grid so out-of-world boxes land in edge cells.
+    to the grid so out-of-world boxes land in edge cells. Output: the
+    input columns other than cell_x / cell_y, in order, then cell_x,
+    cell_y.
+
+    Three selectExpr projections (cell bounds, then one explode per
+    axis: Spark allows one generator per select) built from
+    C.grid_cell_sql text, so the whole plan costs three Py4J round
+    trips instead of a few dozen Column-node calls.
     """
     n = 1 << depth
     sx = (world.max_x - world.min_x) / n
     sy = (world.max_y - world.min_y) / n
-
-    def cell(c: str, wmin: float, s: float) -> Column:
-        return F.greatest(F.lit(0), F.least(F.lit(n - 1), F.floor((F.col(c) - wmin) / s))).cast("int")
-
-    out = (
-        df.withColumn("_gx0", cell(min_x, world.min_x, sx))
-        .withColumn("_gx1", cell(max_x, world.min_x, sx))
-        .withColumn("_gy0", cell(min_y, world.min_y, sy))
-        .withColumn("_gy1", cell(max_y, world.min_y, sy))
-        .withColumn(cell_x, F.explode(F.sequence(F.col("_gx0"), F.col("_gx1"))))
-        .withColumn(cell_y, F.explode(F.sequence(F.col("_gy0"), F.col("_gy1"))))
-        .drop("_gx0", "_gx1", "_gy0", "_gy1")
+    keep = [f"`{c}`" for c in df.columns if c not in (cell_x, cell_y)]
+    return (
+        df.selectExpr(
+            *keep,
+            f"{C.grid_cell_sql(f'`{min_x}`', world.min_x, sx, n)} AS _gx0",
+            f"{C.grid_cell_sql(f'`{max_x}`', world.min_x, sx, n)} AS _gx1",
+            f"{C.grid_cell_sql(f'`{min_y}`', world.min_y, sy, n)} AS _gy0",
+            f"{C.grid_cell_sql(f'`{max_y}`', world.min_y, sy, n)} AS _gy1",
+        )
+        .selectExpr(*keep, "_gy0", "_gy1",
+                    f"explode(sequence(_gx0, _gx1)) AS `{cell_x}`")
+        .selectExpr(*keep, f"`{cell_x}`",
+                    f"explode(sequence(_gy0, _gy1)) AS `{cell_y}`")
     )
-    return out
 
 
 def coarse_grid(df: DataFrame, cell: float = 255.0, x: str = "x", z: str = "z") -> DataFrame:

@@ -180,20 +180,21 @@ def streaming_distance_join(
     Output prefixes left/right columns ``l_``/``r_`` and carries the
     exact integer ``dist2``.
     """
-    from ..operators.joins import _gcoord, _ring_grid
+    from ..operators.joins import _cell_sql, _ring_grid
 
-    depth, n, sx, sy, r = _ring_grid(world, d, depth,
-                                     who="streaming_distance_join")
+    depth, _, _, _, r = _ring_grid(world, d, depth,
+                                   who="streaming_distance_join")
+    cx, cy = _cell_sql(world, depth, "x", "y")
     lc = (
         left.withWatermark(ts_col, watermark)
-        .withColumn("cell_x", _gcoord(F.col("x"), world.min_x, sx, n))
-        .withColumn("cell_y", _gcoord(F.col("y"), world.min_y, sy, n))
+        .withColumn("cell_x", F.expr(cx))
+        .withColumn("cell_y", F.expr(cy))
         .alias("l")
     )
     rc = (
         right.withWatermark(ts_col, watermark)
-        .withColumn("_cx", _gcoord(F.col("x"), world.min_x, sx, n))
-        .withColumn("_cy", _gcoord(F.col("y"), world.min_y, sy, n))
+        .withColumn("_cx", F.expr(cx))
+        .withColumn("_cy", F.expr(cy))
         .withColumn("_dx", F.explode(F.sequence(F.lit(-r), F.lit(r))))
         .withColumn("_dy", F.explode(F.sequence(F.lit(-r), F.lit(r))))
         .withColumn("cell_x", F.col("_cx") + F.col("_dx"))

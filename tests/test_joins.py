@@ -4,7 +4,7 @@
 import numpy as np
 from pyspark.sql import functions as F
 
-from optimizing_spark.config import DEMO_WORLD, QT_BENCH_WORLD
+from optimizing_spark.config import DEMO_WORLD, QT_BENCH_WORLD, Box2
 from optimizing_spark.operators import joins, tiling
 from optimizing_spark.sources import datagen
 from tests.oracles import spatial as oracle
@@ -43,6 +43,59 @@ def test_range_join_equals_linear_scan(spark):
     a = joins.range_join(objs, qs, QT_BENCH_WORLD, depth=4).select("query_id", "obj_id").toPandas()
     b = joins.linear_scan(objs, qs).select("query_id", "obj_id").toPandas()
     assert set(zip(a.query_id, a.obj_id)) == set(zip(b.query_id, b.obj_id))
+
+
+def _lattice(spark, n, edge, id_col):
+    """n x n integer tiles that touch their neighbours edge to edge."""
+    return spark.createDataFrame(
+        [(i * n + j, i * edge, j * edge, (i + 1) * edge, (j + 1) * edge)
+         for i in range(n) for j in range(n)],
+        f"{id_col} long, min_x long, min_y long, max_x long, max_y long")
+
+
+def test_range_join_closed_equals_linear_scan(spark):
+    """convention='closed' == the un-pruned closed control. Touching
+    tiles and query edges on cell boundaries (edge 128 at depth 3) are
+    exactly where closed and rect differ and where the reporting cell
+    must still pick one cell per pair."""
+    world = Box2(0.0, 0.0, 1024.0, 1024.0)
+    objs = _lattice(spark, 12, 96, "obj_id")
+    qs = spark.createDataFrame(
+        [(0, 128, 128, 384, 384), (1, 384, 384, 384, 384),
+         (2, 0, 0, 96, 96), (3, 500, 100, 1200, 130), (4, -40, 700, 0, 900)],
+        "query_id long, min_x long, min_y long, max_x long, max_y long")
+
+    def pairs(df):
+        return {(r.query_id, r.obj_id) for r in df.select("query_id", "obj_id").collect()}
+
+    closed = pairs(joins.range_join(objs, qs, world, depth=3, convention="closed"))
+    assert closed == pairs(joins.linear_scan(objs, qs, convention="closed"))
+    assert closed > pairs(joins.range_join(objs, qs, world, depth=3))
+
+
+def test_range_join_plan_build_gateway_budget(spark, monkeypatch):
+    """Building a range_join plan is bound by Py4J round trips; with the
+    cell math as SQL text one build stays within a fixed command budget
+    (the same cell math as Column trees takes about 1,400). Counts
+    commands, not time, so it is deterministic. py4j memory-release
+    commands are left out: they fire whenever Python's GC frees a JVM
+    reference, not because of the build."""
+    objs = _qt_objects(spark, 100)
+    qs = spark.createDataFrame(datagen.query_rects_pandas(5))
+    joins.range_join(objs, qs, QT_BENCH_WORLD, depth=6)  # one-time lookups
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\n"):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    joins.range_join(objs, qs, QT_BENCH_WORLD, depth=6)
+    monkeypatch.undo()
+    assert 0 < len(sent) <= 400, len(sent)
 
 
 def test_pip_join_matches_oracle(spark):

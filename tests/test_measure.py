@@ -7,7 +7,7 @@ import numpy as np
 import pytest
 
 from optimizing_spark.config import Box2
-from optimizing_spark.operators.measure import union_area
+from optimizing_spark.operators.measure import _int_grid, union_area
 
 WORLD = Box2(0.0, 0.0, 4096.0, 4096.0)
 E = 4096
@@ -108,3 +108,18 @@ def test_union_area_guard_raises(spark):
     df = _df(spark, x0, y0, x1, y1)
     with pytest.raises(ValueError, match="max_cell_clips"):
         union_area(df, WORLD, depth=0, max_cell_clips=10)
+
+
+def test_int_grid_accepts_int_typed_world():
+    """Box2 fields may be ints (int.is_integer() only exists from
+    Python 3.12); a non-divisible world still raises."""
+    assert _int_grid(Box2(0, 0, 4096, 4096), 6) == (64, 64, 64)
+    with pytest.raises(ValueError, match="2\\^6-divisible"):
+        _int_grid(Box2(0, 0, 4095, 4096), 6)
+
+
+def test_union_area_int_typed_world(spark):
+    x0, y0, x1, y1 = _boxes(60, salt=3)
+    df = _df(spark, x0, y0, x1, y1)
+    got = union_area(df, Box2(0, 0, E, E), depth=4).collect()[0]["union_area"]
+    assert got == _raster_area(x0, y0, x1, y1)

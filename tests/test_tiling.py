@@ -1,11 +1,14 @@
 """Engine tile assignments must match the NumPy golden oracles 100%
 (BASELINE.md target: identical (obj_id -> cell) assignment per object)."""
 
+import math
+
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
-from optimizing_spark.config import DEMO_WORLD, QT_BENCH_WORLD, QT_MAX_DEPTH
+from optimizing_spark.config import DEMO_WORLD, QT_BENCH_WORLD, QT_MAX_DEPTH, Box2
 from optimizing_spark.operators import tiling
 from optimizing_spark.sources import datagen
 from tests.oracles import spatial as oracle
@@ -154,3 +157,57 @@ def test_remove_and_relocate(spark):
     ).select("obj_id", F.col("qt_code").alias("want"))
     cmp = out.join(full, "obj_id").filter(F.col("qt_code") != F.col("want"))
     assert cmp.count() == 0
+
+
+def _covered_cells(box, world, depth):
+    """Pure-Python cover: every clamped grid cell of a closed box."""
+    n = 1 << depth
+    sx = (world.max_x - world.min_x) / n
+    sy = (world.max_y - world.min_y) / n
+
+    def c(v, wmin, s):
+        return max(0, min(n - 1, math.floor((v - wmin) / s)))
+
+    x0, y0, x1, y1 = box
+    return [(cx, cy)
+            for cx in range(c(x0, world.min_x, sx), c(x1, world.min_x, sx) + 1)
+            for cy in range(c(y0, world.min_y, sy), c(y1, world.min_y, sy) + 1)]
+
+
+COVER_BOXES = [  # offsets from the world's min corner; cell edge 128
+    (0, 0, 10, 10),            # one cell
+    (127, 127, 129, 129),      # straddles a cell corner
+    (128, 0, 256, 0),          # min and max exactly on cell edges
+    (300, 500, 900, 510),      # wide strip
+    (-500, -10, -1, 5000),     # left of the world: edge column, clamped
+    (2000, 2000, 3000, 3000),  # beyond the far corner: last cell
+    (-50, -50, 1100, 1100),    # covers the whole world
+]
+
+
+@pytest.mark.parametrize("world", [Box2(0.0, 0.0, 1024.0, 1024.0),
+                                   Box2(-512.0, -512.0, 512.0, 512.0)])
+@pytest.mark.parametrize("dtype,shift", [("long", 0), ("double", 0.5)])
+def test_explode_covering_cells_matches_python_cover(spark, world, dtype, shift):
+    """Pinned against a pure-Python enumeration: edge-straddling and
+    out-of-world boxes, long and double bound columns, a world with a
+    negative origin, and pass-through columns kept in their order."""
+    depth = 3
+    ox, oy = int(world.min_x), int(world.min_y)
+    boxes = [(x0 + ox + shift, y0 + oy + shift, x1 + ox + shift, y1 + oy + shift)
+             for x0, y0, x1, y1 in COVER_BOXES]
+    rows = [(f"b{i}", x0, i, y0, x1, y1, i * 1.5)
+            for i, (x0, y0, x1, y1) in enumerate(boxes)]
+    df = spark.createDataFrame(
+        rows, f"tag string, lo_x {dtype}, id long, lo_y {dtype}, "
+              f"hi_x {dtype}, hi_y {dtype}, w double")
+    out = tiling.explode_covering_cells(df, world, depth, "lo_x", "lo_y", "hi_x", "hi_y")
+    assert out.columns == df.columns + ["cell_x", "cell_y"]
+    assert dict(out.dtypes)["cell_x"] == dict(out.dtypes)["cell_y"] == "int"
+
+    got = out.collect()
+    assert sorted((r.id, r.cell_x, r.cell_y) for r in got) == sorted(
+        (i, cx, cy) for i, b in enumerate(boxes)
+        for cx, cy in _covered_cells(b, world, depth))
+    # pass-through values ride along unchanged
+    assert {tuple(r)[:7] for r in got} == set(rows)
