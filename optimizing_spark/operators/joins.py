@@ -3,12 +3,29 @@
 - ``pip_join``: O11/O1 — point-in-box. Broadcast variant for small box
   sets (query geometries are typically tiny vs the object table), and a
   cell-bucketed equi-join variant for large box sets.
-- ``range_join``: O10/O2 — box-overlap join. Both sides are exploded to
-  the fixed-depth grid cells they cover; the equi-join on the cell key
-  is the tree pruning, a residual exact overlap predicate reproduces
-  search() semantics, and duplicate pairs are eliminated WITHOUT a
-  dedup shuffle via the reporting-cell trick (emit a pair only in the
-  unique cell containing the overlap region's min corner).
+- The box family — ``range_join`` (O10/O2 box overlap),
+  ``polygon_join``, ``polygon_polygon_join``, ``segment_box_join``,
+  ``segment_segment_join`` and ``snap_candidates_raw`` — are adapters
+  over ONE plan, ``_bbox_join`` (the reference's one range search,
+  DynamicOctree.hpp:146-171). Each adapter names a bbox per side and an
+  exact predicate; the shared plan is:
+  - method='broadcast': broadcast the right side and join on
+    ``bbox gate AND exact predicate``, so codegen short-circuits
+    non-candidates on the O(1) integer gate.
+  - method='cells' (the both-sides-large, 100 TB shape): a box side
+    explodes to the fixed-depth grid cells its bbox covers, a point
+    side keeps its ONE home cell, and candidates meet in a single
+    (cell_x, cell_y) equi-join — the equi-join on the cell key is the
+    tree pruning. Two box sides emit a pair only in its reporting cell
+    (the cell holding the bbox-overlap region's min corner), so
+    duplicates vanish WITHOUT a dedup shuffle; a point meets each box
+    in one cell only, so it needs no such gate. The residual is ONE
+    filter, ``bbox gate AND reporting cell AND exact predicate``: the
+    cheap integer gates first and the costly fold last. Conjunct order
+    survives Catalyst (no cost-based reordering), so a pair sharing k
+    cells pays k cheap tests but exactly ONE fold (measured 2.0x on the
+    20M-polygon bench --poly); chained filters would let a later-pushed
+    fold land ahead of the gates.
 - ``knn_join``: O17/O22 — cell-local kNN: ring-expansion candidate
   generation (the 3x3 load ring of WorldPartition::update,
   hpp:198-204), a fast path when the k-th-distance disc provably fits
@@ -17,13 +34,14 @@
   summary (no driver loop, no nested-loop join over the objects).
   Provably exact; checkpoint mode prunes empty branches at runtime.
 - ``ring_semi_join``: O17 — objects residing in the Chebyshev-<=k ring
-  of each query's cell.
+  of each query's cell; ``distance_join`` and ``radius_join`` probe the
+  same ring (``_ring_cells``).
 - ``nearest_hit``: O22 — argmin join via min_by (k=1 fast path).
 - ``linear_scan``: O29 — the un-pruned control (plain theta-join).
 
 Scale notes: all joins are equi-joins on integer cell keys (shuffle
 hash / sort-merge with AQE skew split) except the deliberately-naive
-linear_scan and the broadcast pip path (BroadcastNestedLoopJoin is the
+linear_scan and the broadcast paths (BroadcastNestedLoopJoin is the
 right plan when one side is a handful of query geometries).
 """
 
@@ -61,6 +79,95 @@ def _report_sql(world: Box2, depth: int, a: tuple[str, str], b: tuple[str, str])
     return f"{rx} = cell_x AND {ry} = cell_y"
 
 
+def _hit_sql(lbox: tuple[str, ...], rbox: tuple[str, ...], convention: str) -> str:
+    """Bbox gate as SQL text. A point ``lbox`` = (x, y) must lie in the
+    closed ``rbox``; two boxes (min_x, min_y, max_x, max_y) overlap,
+    closed (geometry.overlaps), or under convention='rect' by the
+    asymmetric search() rule with ``lbox`` as the query
+    (geometry.rect_overlaps). Text, like grid_cell_sql, so the gate is
+    one Py4J round trip instead of ~15 Column-node calls; the
+    range_join == linear_scan tests hold it to the Column forms."""
+    x0, y0, x1, y1 = rbox
+    if len(lbox) == 2:
+        x, y = lbox
+        return f"{x} >= {x0} AND {x} <= {x1} AND {y} >= {y0} AND {y} <= {y1}"
+    lt = "<" if convention == "rect" else "<="
+    a0x, a0y, a1x, a1y = lbox
+    return f"{a0x} {lt} {x1} AND {a1x} >= {x0} AND {a0y} {lt} {y1} AND {a1y} >= {y0}"
+
+
+def _bbox_join(
+    left: DataFrame,
+    right: DataFrame,
+    lbox: tuple[str, ...],
+    rbox: tuple[str, ...],
+    pred: Column | None,
+    method: str,
+    world: Box2 | None,
+    depth: int,
+    convention: str = "closed",
+) -> DataFrame:
+    """The box family's one join plan (see the module docstring).
+    ``lbox``/``rbox`` name each side's bbox columns (min_x, min_y,
+    max_x, max_y), or (x, y) for a point left side; ``pred`` is the
+    exact predicate (None when the bbox gate is exact). Returns both
+    sides' columns, in cells mode led by the match cell (cell_x,
+    cell_y); the adapter projects its output."""
+    if method not in ("broadcast", "cells"):
+        raise ValueError(f"unknown method {method!r}")
+    if method == "cells" and world is None:
+        raise ValueError("method='cells' needs a world box")
+    gates = [_hit_sql(lbox, rbox, convention)]
+    if method == "cells":
+        if len(lbox) == 2:
+            cx, cy = _cell_sql(world, depth, *lbox)
+            left = left.withColumns({"cell_x": F.expr(cx), "cell_y": F.expr(cy)})
+        else:
+            left = explode_covering_cells(left, world, depth, *lbox)
+            gates.append(_report_sql(world, depth, lbox[:2], rbox[:2]))
+        right = explode_covering_cells(right, world, depth, *rbox)
+    cond = F.expr(" AND ".join(gates))
+    if pred is not None:
+        cond = cond & pred
+    if method == "broadcast":
+        return left.join(F.broadcast(right), cond)
+    return left.join(right, ["cell_x", "cell_y"]).filter(cond)
+
+
+def _poly_box(df: DataFrame, keep, vertices: str, p: str) -> tuple[DataFrame, tuple]:
+    """``keep`` columns of df plus the bbox of its ``vertices`` ring as
+    _{p}x0, _{p}y0, _{p}x1, _{p}y1."""
+    box = tuple(f"_{p}{c}" for c in ("x0", "y0", "x1", "y1"))
+    bb = G.polygon_bbox(F.col(vertices))
+    return df.select(*keep, *[c.alias(n) for c, n in zip(bb, box)]), box
+
+
+def _seg_box(df: DataFrame, seg, p: str, pad: int = 0) -> tuple[DataFrame, tuple]:
+    """df plus the bbox of the segment ``seg`` = (x1, y1, x2, y2),
+    dilated by ``pad``, as _{p}_min_x, _{p}_min_y, _{p}_max_x,
+    _{p}_max_y."""
+    x1, y1, x2, y2 = seg
+    box = tuple(f"_{p}_{c}" for c in ("min_x", "min_y", "max_x", "max_y"))
+    lo, hi = (f" - {pad}", f" + {pad}") if pad else ("", "")
+    return df.selectExpr(
+        "*", f"least({x1}, {x2}){lo} AS {box[0]}", f"least({y1}, {y2}){lo} AS {box[1]}",
+        f"greatest({x1}, {x2}){hi} AS {box[2]}", f"greatest({y1}, {y2}){hi} AS {box[3]}",
+    ), box
+
+
+def _ring_cells(df: DataFrame, cx: str, cy: str, r: int) -> DataFrame:
+    """df with one row per cell of the Chebyshev-<=r ring around its
+    home cell (SQL text ``cx``, ``cy``), as (cell_x, cell_y) — the probe
+    side of the distance-band and ring joins."""
+    keep = [f"`{c}`" for c in df.columns if c not in ("cell_x", "cell_y")]
+    return (
+        df.selectExpr(*keep, f"{cx} AS _qcx", f"{cy} AS _qcy")
+        .selectExpr("*", f"explode(sequence({-r}, {r})) AS _dx")
+        .selectExpr("*", f"explode(sequence({-r}, {r})) AS _dy")
+        .selectExpr(*keep, "_qcx + _dx AS cell_x", "_qcy + _dy AS cell_y")
+    )
+
+
 def pip_join(
     points: DataFrame,
     boxes: DataFrame,
@@ -92,29 +199,19 @@ def range_join(
     - 'rect': asymmetric 2D search() semantics (.Test/QuadTree.cpp:58-69)
     - 'closed': 3D closed overlap on x/y (BoundaryBox.hpp:47-51)
 
-    Both sides explode to covered fixed-depth cells; pairs are emitted
-    only in the reporting cell = cell of the overlap region's min
-    corner, so no dedup pass is needed. Expected candidates per cell
-    stay O(density); the equi-join shuffles on (cell_x, cell_y).
+    The box family's cells plan (module docstring) with the bbox gate as
+    the exact predicate: expected candidates per cell stay O(density),
+    the equi-join shuffles on (cell_x, cell_y), and the reporting cell
+    replaces a dedup pass.
     """
-    def side(df: DataFrame, key: str, p: str) -> DataFrame:
+    def side(df: DataFrame, key: str, p: str) -> tuple[DataFrame, tuple]:
         box = ("min_x", "min_y", "max_x", "max_y")
-        return explode_covering_cells(
-            df.selectExpr(key, *[f"{c} AS {p}_{c}" for c in box]),
-            world, depth, *[f"{p}_{c}" for c in box])
+        return (df.selectExpr(key, *[f"{c} AS {p}_{c}" for c in box]),
+                tuple(f"{p}_{c}" for c in box))
 
-    o = side(objects, "obj_id", "o")
-    q = side(queries, "query_id", "q")
-    qbox = G.BoxCols("q_min_x", "q_min_y", "q_max_x", "q_max_y")
-    obox = G.BoxCols("o_min_x", "o_min_y", "o_max_x", "o_max_y")
-    if convention == "rect":
-        pred = G.rect_overlaps(qbox, obox)
-    else:
-        pred = G.overlaps(qbox, obox)
-    joined = q.join(o, ["cell_x", "cell_y"]).filter(pred)
-    # reporting-cell dedup: overlap-region min corner must lie in this cell
-    report = _report_sql(world, depth, ("q_min_x", "q_min_y"), ("o_min_x", "o_min_y"))
-    return joined.filter(report).drop("cell_x", "cell_y")
+    (q, qbox), (o, obox) = side(queries, "query_id", "q"), side(objects, "obj_id", "o")
+    return _bbox_join(q, o, qbox, obox, None, "cells", world, depth, convention) \
+        .drop("cell_x", "cell_y")
 
 
 def linear_scan(objects: DataFrame, queries: DataFrame, convention: str = "rect") -> DataFrame:
@@ -145,17 +242,10 @@ def polygon_join(
     query_id, vertices: array<struct<x,y>>), boundary-inclusive CCW
     half-plane test (functions/geometry.point_in_convex_polygon).
 
-    method='broadcast' (default, the small-dim case): broadcast the
-    polygons; the join condition puts the O(1) AABB reject BEFORE the
-    per-edge fold so codegen short-circuits non-candidates cheaply.
-
-    method='cells' (the both-sides-large case): polygons explode to
-    the fixed-depth grid cells their bbox covers, points hash to their
-    single cell, and candidates meet in an equi-join on (cell_x,
-    cell_y) — same shuffle shape as range_join; each point lives in
-    exactly one cell so no dedup pass is needed. At 100 TB this is the
-    plan: shuffle keyed on uniform integer cells, exact predicate only
-    on co-located candidates.
+    method='broadcast' (default, the small-dim case) or 'cells' (the
+    both-sides-large case): the box family's plans (module docstring),
+    with the point side keeping its single home cell, so no reporting
+    gate is needed.
 
     test='convex' (default) uses the boundary-inclusive CCW half-plane
     fold (geometry.point_in_convex_polygon); test='crossing' uses the
@@ -164,16 +254,7 @@ def polygon_join(
     the same integer-exact guarantee and the same bbox prefilter /
     broadcast / cell-join plans.
     """
-    bx0, by0, bx1, by1 = G.polygon_bbox(F.col("vertices"))
-    polys = polygons.select(
-        "query_id", "vertices",
-        bx0.alias("_bx0"), by0.alias("_by0"),
-        bx1.alias("_bx1"), by1.alias("_by1"),
-    )
-    in_box = (
-        (F.col("x") >= F.col("_bx0")) & (F.col("x") <= F.col("_bx1"))
-        & (F.col("y") >= F.col("_by0")) & (F.col("y") <= F.col("_by1"))
-    )
+    polys, box = _poly_box(polygons, ["query_id", "vertices"], "vertices", "b")
     if test == "convex":
         in_poly = G.point_in_convex_polygon(
             F.col("x"), F.col("y"), F.col("vertices"))
@@ -182,21 +263,8 @@ def polygon_join(
             F.col("x"), F.col("y"), F.col("vertices"))
     else:
         raise ValueError(f"unknown test {test!r}")
-    if method == "broadcast":
-        out = points.join(F.broadcast(polys), in_box & in_poly)
-    elif method == "cells":
-        if world is None:
-            raise ValueError("method='cells' needs a world box")
-        pc = explode_covering_cells(
-            polys, world, depth, "_bx0", "_by0", "_bx1", "_by1")
-        cx, cy = _cell_sql(world, depth, "x", "y")
-        pt = points.withColumn("cell_x", F.expr(cx)) \
-            .withColumn("cell_y", F.expr(cy))
-        out = pt.join(pc, ["cell_x", "cell_y"]).filter(in_box & in_poly) \
-            .drop("cell_x", "cell_y")
-    else:
-        raise ValueError(f"unknown method {method!r}")
-    return out.drop("_bx0", "_by0", "_bx1", "_by1")
+    return _bbox_join(points, polys, ("x", "y"), box, in_poly, method, world, depth) \
+        .drop("cell_x", "cell_y", *box)
 
 
 DIST_JOIN_MAX_FANOUT = 81  # (2r+1)^2 at r=4 — the silent-blow-up guard
@@ -218,6 +286,8 @@ def _ring_grid(world: Box2, d: int, depth: int | None,
     the world extent (depth 0, one cell, r=0: the exact d^2 predicate
     does all the work). The fan-out guard therefore only fires on an
     EXPLICIT deep depth with a large d."""
+    if world is None:
+        raise ValueError(f"{who} needs a world box")
     if depth is None:
         ext = min(world.max_x - world.min_x, world.max_y - world.min_y)
         depth = max(0, min(12, int(math.floor(
@@ -267,7 +337,6 @@ def distance_join(
     raises instead of silently shuffling r^2 copies."""
     depth, _, _, _, r = _ring_grid(world, d, depth, max_fanout)
     acx, acy = _cell_sql(world, depth, "ax", "ay")
-    bcx, bcy = _cell_sql(world, depth, "bx", "by")
     # coords cast to long: the d^2 residual squares coordinate deltas,
     # which overflows 32-bit inputs under ANSI mode (the driver's
     # default session) — the cast keeps the operator exact for any
@@ -277,22 +346,11 @@ def distance_join(
         F.col("x").cast("long").alias("ax"),
         F.col("y").cast("long").alias("ay"),
     ).withColumn("cell_x", F.expr(acx)).withColumn("cell_y", F.expr(acy))
-    b = (
-        points.select(
-            F.col(id_col).alias("id_b"),
-            F.col("x").cast("long").alias("bx"),
-            F.col("y").cast("long").alias("by"),
-        )
-        .withColumn("_bcx", F.expr(bcx))
-        .withColumn("_bcy", F.expr(bcy))
-        .withColumn("_dx", F.explode(F.sequence(F.lit(-r), F.lit(r))))
-        .withColumn("_dy", F.explode(F.sequence(F.lit(-r), F.lit(r))))
-        .select(
-            "id_b", "bx", "by",
-            (F.col("_bcx") + F.col("_dx")).alias("cell_x"),
-            (F.col("_bcy") + F.col("_dy")).alias("cell_y"),
-        )
-    )
+    b = _ring_cells(points.select(
+        F.col(id_col).alias("id_b"),
+        F.col("x").cast("long").alias("bx"),
+        F.col("y").cast("long").alias("by"),
+    ), *_cell_sql(world, depth, "bx", "by"), r)
     dist2 = (
         (F.col("ax") - F.col("bx")) * (F.col("ax") - F.col("bx"))
         + (F.col("ay") - F.col("by")) * (F.col("ay") - F.col("by"))
@@ -443,7 +501,6 @@ def radius_join(
     depth, _, _, _, r = _ring_grid(world, d, depth, max_fanout,
                                    who="radius_join")
     pcx, pcy = _cell_sql(world, depth, "x", "y")
-    qcx, qcy = _cell_sql(world, depth, "qx", "qy")
     p = (
         points
         .withColumn("x", F.col("x").cast("long"))
@@ -451,18 +508,11 @@ def radius_join(
         .withColumn("cell_x", F.expr(pcx))
         .withColumn("cell_y", F.expr(pcy))
     )
-    q = (
+    q = _ring_cells(
         queries
         .withColumn("qx", F.col("qx").cast("long"))
-        .withColumn("qy", F.col("qy").cast("long"))
-        .withColumn("_qcx", F.expr(qcx))
-        .withColumn("_qcy", F.expr(qcy))
-        .withColumn("_dx", F.explode(F.sequence(F.lit(-r), F.lit(r))))
-        .withColumn("_dy", F.explode(F.sequence(F.lit(-r), F.lit(r))))
-        .withColumn("cell_x", F.col("_qcx") + F.col("_dx"))
-        .withColumn("cell_y", F.col("_qcy") + F.col("_dy"))
-        .drop("_qcx", "_qcy", "_dx", "_dy")
-    )
+        .withColumn("qy", F.col("qy").cast("long")),
+        *_cell_sql(world, depth, "qx", "qy"), r)
     rhs = F.broadcast(q) if method == "broadcast" else q
     dist2 = (
         (F.col("qx") - F.col("x")) * (F.col("qx") - F.col("x"))
@@ -489,47 +539,15 @@ def polygon_polygon_join(
     (geometry.polygons_overlap: any edge pair intersects, or either
     vertex-0 containment), integer arithmetic throughout.
 
-    method='broadcast': broadcast polys_b; the join condition runs the
-    O(1) bbox reject before the edge-pair fold. method='cells': both
-    sides explode their bboxes to fixed-depth grid cells, candidates
-    meet in a (cell_x, cell_y) equi-join with reporting-cell dedup —
-    the 100 TB shape, same as range_join/segment_box_join.
+    method='broadcast' (broadcast polys_b) or 'cells': the box family's
+    plans (module docstring) over the two polygon bboxes; the O(1) bbox
+    and reporting-cell gates run before the edge-pair fold.
     """
-    abx0, aby0, abx1, aby1 = G.polygon_bbox(F.col("vertices_a"))
-    bbx0, bby0, bbx1, bby1 = G.polygon_bbox(F.col("vertices_b"))
-    a = polys_a.select(
-        "*",
-        abx0.alias("_ax0"), aby0.alias("_ay0"),
-        abx1.alias("_ax1"), aby1.alias("_ay1"),
-    )
-    b = polys_b.select(
-        "*",
-        bbx0.alias("_bx0"), bby0.alias("_by0"),
-        bbx1.alias("_bx1"), bby1.alias("_by1"),
-    )
-    bbox_hit = (
-        (F.col("_ax0") <= F.col("_bx1")) & (F.col("_ax1") >= F.col("_bx0"))
-        & (F.col("_ay0") <= F.col("_by1")) & (F.col("_ay1") >= F.col("_by0"))
-    )
+    a, abox = _poly_box(polys_a, ["*"], "vertices_a", "a")
+    b, bbox = _poly_box(polys_b, ["*"], "vertices_b", "b")
     overlap = G.polygons_overlap(F.col("vertices_a"), F.col("vertices_b"))
-    drop = ["_ax0", "_ay0", "_ax1", "_ay1", "_bx0", "_by0", "_bx1", "_by1"]
-    if method == "broadcast":
-        return a.join(F.broadcast(b), bbox_hit & overlap).drop(*drop)
-    if method != "cells":
-        raise ValueError(f"unknown method {method!r}")
-    if world is None:
-        raise ValueError("method='cells' needs a world box")
-    ac = explode_covering_cells(a, world, depth, "_ax0", "_ay0", "_ax1", "_ay1")
-    bc = explode_covering_cells(b, world, depth, "_bx0", "_by0", "_bx1", "_by1")
-    report = F.expr(_report_sql(world, depth, ("_ax0", "_ay0"), ("_bx0", "_by0")))
-    # cheap integer gates FIRST, the O(|A|*|B|) edge-pair fold LAST:
-    # conjunct order survives Catalyst (no cost-based reordering), so a
-    # pair sharing k cells pays k cheap report/bbox tests but exactly
-    # ONE overlap fold — in its reporting cell (measured 2.0x on the
-    # 20M-polygon bench --poly)
-    joined = ac.join(bc, ["cell_x", "cell_y"]) \
-        .filter(report & bbox_hit).filter(overlap)
-    return joined.drop("cell_x", "cell_y", *drop)
+    return _bbox_join(a, b, abox, bbox, overlap, method, world, depth) \
+        .drop("cell_x", "cell_y", *abox, *bbox)
 
 
 def segment_box_join(
@@ -546,38 +564,16 @@ def segment_box_join(
     (geometry.segment_intersects_box; the batch-join form of the
     reference's per-ray slab walk, Raytracing.hpp:267-289).
 
-    method='broadcast': broadcast the boxes, stream segments through.
-    method='cells': both sides explode to fixed-depth grid cells of
-    their bboxes and candidates meet in a (cell_x, cell_y) equi-join —
-    the 100 TB shape (same as range_join); pairs are emitted only in
-    the reporting cell = cell of the bbox-overlap region's min corner,
-    so no dedup pass is needed.
+    method='broadcast' (broadcast the boxes, stream segments through)
+    or 'cells': the box family's plans (module docstring) over the
+    segment bbox and the box.
     """
-    qbox = G.BoxCols("q_min_x", "q_min_y", "q_max_x", "q_max_y")
+    qbox = ("q_min_x", "q_min_y", "q_max_x", "q_max_y")
     pred = G.segment_intersects_box(
-        F.col("x1"), F.col("y1"), F.col("x2"), F.col("y2"), qbox)
-    if method == "broadcast":
-        return segments.join(F.broadcast(boxes), pred)
-    if method != "cells":
-        raise ValueError(f"unknown method {method!r}")
-    if world is None:
-        raise ValueError("method='cells' needs a world box")
-    s = explode_covering_cells(
-        segments
-        .withColumn("_s_min_x", F.least("x1", "x2"))
-        .withColumn("_s_min_y", F.least("y1", "y2"))
-        .withColumn("_s_max_x", F.greatest("x1", "x2"))
-        .withColumn("_s_max_y", F.greatest("y1", "y2")),
-        world, depth, "_s_min_x", "_s_min_y", "_s_max_x", "_s_max_y",
-    )
-    q = explode_covering_cells(
-        boxes, world, depth, "q_min_x", "q_min_y", "q_max_x", "q_max_y")
-    report = _report_sql(world, depth, ("_s_min_x", "_s_min_y"), ("q_min_x", "q_min_y"))
-    # cheap integer reporting-cell gate BEFORE the SAT fold (same
-    # conjunct-ordering rationale as polygon_polygon_join)
-    joined = s.join(q, ["cell_x", "cell_y"]).filter(report).filter(pred)
-    return joined.drop(
-        "cell_x", "cell_y", "_s_min_x", "_s_min_y", "_s_max_x", "_s_max_y")
+        F.col("x1"), F.col("y1"), F.col("x2"), F.col("y2"), G.BoxCols(*qbox))
+    s, sbox = _seg_box(segments, ("x1", "y1", "x2", "y2"), "s")
+    return _bbox_join(s, boxes, sbox, qbox, pred, method, world, depth) \
+        .drop("cell_x", "cell_y", *sbox)
 
 
 def segment_segment_join(
@@ -596,44 +592,16 @@ def segment_segment_join(
     integer mutual non-strict straddle + bbox overlap, so collinear
     overlaps and endpoint touches count (closed sets).
 
-    method='broadcast': broadcast the right side, stream the left.
-    method='cells': both sides explode to fixed-depth grid cells of
-    their bboxes and candidates meet in ONE (cell_x, cell_y)
-    equi-join; a pair is emitted only in its reporting cell (the cell
-    of the bbox-overlap region's min corner), so no distinct pass —
-    the 100 TB shape shared with range_join / segment_box_join."""
+    method='broadcast' (broadcast the right side, stream the left) or
+    'cells': the box family's plans (module docstring) over the two
+    segment bboxes."""
     pred = G.segments_intersect(
         F.col("ax1"), F.col("ay1"), F.col("ax2"), F.col("ay2"),
         F.col("bx1"), F.col("by1"), F.col("bx2"), F.col("by2"))
-    if method == "broadcast":
-        return left.join(F.broadcast(right), pred)
-    if method != "cells":
-        raise ValueError(f"unknown method {method!r}")
-    if world is None:
-        raise ValueError("method='cells' needs a world box")
-    a = explode_covering_cells(
-        left
-        .withColumn("_a_min_x", F.least("ax1", "ax2"))
-        .withColumn("_a_min_y", F.least("ay1", "ay2"))
-        .withColumn("_a_max_x", F.greatest("ax1", "ax2"))
-        .withColumn("_a_max_y", F.greatest("ay1", "ay2")),
-        world, depth, "_a_min_x", "_a_min_y", "_a_max_x", "_a_max_y",
-    )
-    b = explode_covering_cells(
-        right
-        .withColumn("_b_min_x", F.least("bx1", "bx2"))
-        .withColumn("_b_min_y", F.least("by1", "by2"))
-        .withColumn("_b_max_x", F.greatest("bx1", "bx2"))
-        .withColumn("_b_max_y", F.greatest("by1", "by2")),
-        world, depth, "_b_min_x", "_b_min_y", "_b_max_x", "_b_max_y",
-    )
-    report = _report_sql(world, depth, ("_a_min_x", "_a_min_y"), ("_b_min_x", "_b_min_y"))
-    # cheap integer reporting-cell gate BEFORE the 4-orientation fold
-    # (same conjunct ordering as segment_box_join / polygon joins)
-    joined = a.join(b, ["cell_x", "cell_y"]).filter(report).filter(pred)
-    return joined.drop(
-        "cell_x", "cell_y", "_a_min_x", "_a_min_y", "_a_max_x",
-        "_a_max_y", "_b_min_x", "_b_min_y", "_b_max_x", "_b_max_y")
+    a, abox = _seg_box(left, ("ax1", "ay1", "ax2", "ay2"), "a")
+    b, bbox = _seg_box(right, ("bx1", "by1", "bx2", "by2"), "b")
+    return _bbox_join(a, b, abox, bbox, pred, method, world, depth) \
+        .drop("cell_x", "cell_y", *abox, *bbox)
 
 
 def snap_join(
@@ -731,24 +699,17 @@ def snap_candidates_raw(
     world: Box2,
     depth: int | None = None,
 ) -> DataFrame:
-    """The cells-mode candidate join of snap_join, pre-filter: segment
-    bboxes dilate by max_d and explode to covering cells; each point
-    keeps its ONE home cell, so every qualifying pair meets exactly
-    once. Works unchanged on a STREAMING points side (both projections
-    are stateless; the equi-join against the static exploded segment
-    side is a stream-static join)."""
+    """The cells-mode candidate join of snap_join, pre-filter: the box
+    family's cells plan (module docstring) of each point against the
+    segment bboxes dilated by max_d. Each point keeps its ONE home
+    cell, so every qualifying pair meets exactly once. Works unchanged
+    on a STREAMING points side (both projections are stateless; the
+    equi-join against the static exploded segment side is a
+    stream-static join)."""
     depth = _ring_grid(world, max_d, depth, who="snap_join")[0]
-    s = explode_covering_cells(
-        segments
-        .withColumn("_s_min_x", F.least("x1", "x2") - max_d)
-        .withColumn("_s_min_y", F.least("y1", "y2") - max_d)
-        .withColumn("_s_max_x", F.greatest("x1", "x2") + max_d)
-        .withColumn("_s_max_y", F.greatest("y1", "y2") + max_d),
-        world, depth, "_s_min_x", "_s_min_y", "_s_max_x", "_s_max_y",
-    ).drop("_s_min_x", "_s_min_y", "_s_max_x", "_s_max_y")
-    cx, cy = _cell_sql(world, depth, "px", "py")
-    p = points.withColumn("cell_x", F.expr(cx)).withColumn("cell_y", F.expr(cy))
-    return p.join(s, ["cell_x", "cell_y"])
+    s, sbox = _seg_box(segments, ("x1", "y1", "x2", "y2"), "s", pad=max_d)
+    return _bbox_join(points, s, ("px", "py"), sbox, None, "cells", world, depth) \
+        .drop(*sbox)
 
 
 def ring_semi_join(
@@ -757,16 +718,7 @@ def ring_semi_join(
     """O17: all objects whose cell lies in the Chebyshev-<=k ring around
     each query point's cell (the 3x3 load ring). Objects must carry
     (cell_x, cell_y); queries carry point (x, y)."""
-    cx, cy = _cell_sql(world, depth, "x", "y")
-    q = (
-        queries.withColumn("_qcx", F.expr(cx))
-        .withColumn("_qcy", F.expr(cy))
-        .withColumn("_dx", F.explode(F.sequence(F.lit(-k), F.lit(k))))
-        .withColumn("_dy", F.explode(F.sequence(F.lit(-k), F.lit(k))))
-        .withColumn("cell_x", F.col("_qcx") + F.col("_dx"))
-        .withColumn("cell_y", F.col("_qcy") + F.col("_dy"))
-        .drop("_qcx", "_qcy", "_dx", "_dy")
-    )
+    q = _ring_cells(queries, *_cell_sql(world, depth, "x", "y"), k)
     return q.join(objects, ["cell_x", "cell_y"])
 
 

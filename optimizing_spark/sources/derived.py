@@ -607,9 +607,12 @@ def shoelace_sql(ring: list[tuple[str, str]]) -> tuple[str, str, str]:
 
 
 # ---------------------------------------------------------------------------
-# walls: long axis-aligned obstacle segments in a dense 8192-edge
-# subworld (line-of-sight / visibility inputs) — one per supplier,
-# horizontal/vertical alternating on key parity, length 1024..2047
+# walls: long axis-aligned obstacle segments that START inside a dense
+# 8192-edge subworld (line-of-sight / visibility inputs) — one per
+# supplier, horizontal/vertical alternating on key parity, length
+# 1024..2047. The far endpoint is not wrapped, so it may overhang the
+# subworld by up to 2047 (bx2/by2 <= 10238); both twins agree, and
+# q_visibility consumes walls only as a broadcast predicate.
 # ---------------------------------------------------------------------------
 
 W8 = 8192

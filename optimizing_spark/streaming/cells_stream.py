@@ -180,7 +180,7 @@ def streaming_distance_join(
     Output prefixes left/right columns ``l_``/``r_`` and carries the
     exact integer ``dist2``.
     """
-    from ..operators.joins import _cell_sql, _ring_grid
+    from ..operators.joins import _cell_sql, _ring_cells, _ring_grid
 
     depth, _, _, _, r = _ring_grid(world, d, depth,
                                    who="streaming_distance_join")
@@ -191,17 +191,7 @@ def streaming_distance_join(
         .withColumn("cell_y", F.expr(cy))
         .alias("l")
     )
-    rc = (
-        right.withWatermark(ts_col, watermark)
-        .withColumn("_cx", F.expr(cx))
-        .withColumn("_cy", F.expr(cy))
-        .withColumn("_dx", F.explode(F.sequence(F.lit(-r), F.lit(r))))
-        .withColumn("_dy", F.explode(F.sequence(F.lit(-r), F.lit(r))))
-        .withColumn("cell_x", F.col("_cx") + F.col("_dx"))
-        .withColumn("cell_y", F.col("_cy") + F.col("_dy"))
-        .drop("_cx", "_cy", "_dx", "_dy")
-        .alias("r")
-    )
+    rc = _ring_cells(right.withWatermark(ts_col, watermark), cx, cy, r).alias("r")
     b = f"INTERVAL {int(bound_seconds)} SECONDS"
     # long cast: squaring 32-bit coordinate deltas overflows under
     # ANSI mode — same guard as the batch distance_join

@@ -23,8 +23,9 @@ exact CONTROL for the LSH path (the O29 analog); its plan is O(N^2) by
 construction and the round-4 verdict pins it to gate scale.
 
 Usage:
-    python scripts/sf1_sweep.py build   # materialize /tmp/sf1 (once)
-    python scripts/sf1_sweep.py run     # sweep + JSON report
+    python scripts/sf1_sweep.py build            # materialize /tmp/sf1 (once)
+    python scripts/sf1_sweep.py run              # sweep every query + JSON report
+    python scripts/sf1_sweep.py run q_snap ...   # sweep only the named queries
 """
 
 from __future__ import annotations
@@ -127,7 +128,9 @@ def _spill() -> tuple[int, int] | tuple[None, None]:
         return (None, None)
 
 
-def run() -> dict:
+def run(names: list[str] | None = None) -> dict:
+    """Sweep the named queries (all when ``names`` is empty) and
+    oracle-check the whitelisted ones among them."""
     import duckdb
 
     import __spark_entry__ as entry
@@ -144,6 +147,8 @@ def run() -> dict:
                     f"'{DST}/{t}.parquet/*.parquet'")
 
     qs, osql = entry.queries(), entry.oracle_sql()
+    if names:
+        qs = {n: qs[n] for n in names}
     report: dict = {"sf": 1.0, "dir": DST, "cpus": cpus,
                     "skipped": SKIP, "queries": {}, "oracle_checked": {}}
     fails = 0
@@ -169,10 +174,10 @@ def run() -> dict:
                 "error": str(ex).splitlines()[0][:300]}
             print(f"FAIL  {name}: {str(ex).splitlines()[0][:200]}", flush=True)
     for name in ORACLE_WHITELIST:
-        if name not in osql or name in SKIP:
+        if name not in osql or name not in qs or name in SKIP:
             continue
         try:
-            got = entry.queries()[name](spark, DST).toArrow().to_pandas()
+            got = qs[name](spark, DST).toArrow().to_pandas()
             t0 = time.time()
             want = con.execute(osql[name]).arrow().to_pandas()
             ok, why = compare(got, want)
@@ -199,4 +204,4 @@ if __name__ == "__main__":
     if "build" in sys.argv:
         build()
     else:
-        print(json.dumps(run()))
+        print(json.dumps(run([a for a in sys.argv[1:] if a != "run"])))

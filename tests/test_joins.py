@@ -2,6 +2,7 @@
 (BASELINE.md: identical join result rows)."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from optimizing_spark.config import DEMO_WORLD, QT_BENCH_WORLD, Box2
@@ -390,7 +391,76 @@ def test_polygon_join_cells_equals_broadcast(spark):
         .select("query_id", "point_id").toPandas()
     b = joins.polygon_join(pts, pdf, method="cells", world=world, depth=5) \
         .select("query_id", "point_id").toPandas()
+    assert len(b) == len(set(zip(b.query_id, b.point_id)))  # exactly-once
     assert set(zip(a.query_id, a.point_id)) == set(zip(b.query_id, b.point_id))
+
+
+_TRI = "array<struct<x:long,y:long>>"
+_SEG = "long, x1 long, y1 long, x2 long, y2 long"
+
+
+def _tri(s, cols, d=0):
+    return s.createDataFrame(
+        [(0, [{"x": d, "y": d}, {"x": 9, "y": d}, {"x": d, "y": 9}])], cols)
+
+
+def test_polygon_polygon_join_cells_gates_before_fold(spark):
+    """The cells plan's join condition runs the integer bbox and
+    reporting-cell gates before the first edge-pair fold (``exists(``),
+    so a pair sharing k cells pays one fold, not k. Pins the conjunct
+    order the shared bbox-join plan writes against Catalyst's filter
+    push order."""
+    import re
+
+    df = joins.polygon_polygon_join(
+        _tri(spark, f"a_id long, vertices_a {_TRI}"),
+        _tri(spark, f"b_id long, vertices_b {_TRI}", 1),
+        method="cells", world=Box2(0.0, 0.0, 65536.0, 65536.0), depth=5)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    cond = next(line for line in plan.splitlines()
+                if "Join" in line and "exists(" in line)
+    fold = cond.index("exists(")
+    gates = [r"\(_ax0#\d+L? <= _bx1#\d+L?\)", r"\(_ay1#\d+L? >= _by0#\d+L?\)",
+             r"greatest\(_ax0#\d+L?, _bx0#\d+L?\)", r"greatest\(_ay0#\d+L?, _by0#\d+L?\)"]
+    for gate in gates:
+        m = re.search(gate, cond)
+        assert m is not None and m.start() < fold, gate
+
+
+_METHOD_JOINS = {
+    "polygon_join": lambda s, m, w: joins.polygon_join(
+        s.createDataFrame([(0, 1, 1)], "point_id long, x long, y long"),
+        _tri(s, f"query_id long, vertices {_TRI}"), method=m, world=w),
+    "polygon_polygon_join": lambda s, m, w: joins.polygon_polygon_join(
+        _tri(s, f"a_id long, vertices_a {_TRI}"),
+        _tri(s, f"b_id long, vertices_b {_TRI}", 1), method=m, world=w),
+    "segment_box_join": lambda s, m, w: joins.segment_box_join(
+        s.createDataFrame([(0, 0, 0, 9, 9)], f"seg_id {_SEG}"),
+        s.createDataFrame([(0, 1, 1, 5, 5)], "query_id long, q_min_x long, "
+                          "q_min_y long, q_max_x long, q_max_y long"),
+        method=m, world=w),
+    "segment_segment_join": lambda s, m, w: joins.segment_segment_join(
+        s.createDataFrame([(0, 0, 0, 9, 9)], "a_id long, ax1 long, ay1 long, ax2 long, ay2 long"),
+        s.createDataFrame([(0, 0, 9, 9, 0)], "b_id long, bx1 long, by1 long, bx2 long, by2 long"),
+        method=m, world=w),
+    "radius_join": lambda s, m, w: joins.radius_join(
+        s.createDataFrame([(0, 1, 1)], "point_id long, x long, y long"),
+        s.createDataFrame([(0, 2, 2)], "query_id long, qx long, qy long"),
+        5, w, method=m),
+    "snap_join": lambda s, m, w: joins.snap_join(
+        s.createDataFrame([(0, 1, 1)], "point_id long, px long, py long"),
+        s.createDataFrame([(0, 0, 0, 9, 9)], f"seg_id {_SEG}"), 5, w, method=m),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_METHOD_JOINS))
+@pytest.mark.parametrize("method,world", [("bogus", QT_BENCH_WORLD), ("cells", None)],
+                         ids=["bogus_method", "cells_without_world"])
+def test_method_join_rejects_bad_method(spark, name, method, world):
+    """Every method-taking join refuses an unknown method and a cells
+    plan without a world box with a ValueError, before any job runs."""
+    with pytest.raises(ValueError, match="unknown .*method|needs a world box"):
+        _METHOD_JOINS[name](spark, method, world)
 
 
 # ---------------------------------------------------------------------------

@@ -132,6 +132,7 @@ def test_ring_state_ttl_eviction_fires(spark, tmp_path):
     must produce an evicted=True row from the timeout path
     (state.hasTimedOut -> remove) in a later micro-batch — the unload
     rule (WorldPartition.hpp:206-212) under wall-clock timeouts."""
+    import threading
     import time
 
     from pyspark.sql.streaming.state import GroupStateTimeout
@@ -143,6 +144,18 @@ def test_ring_state_ttl_eviction_fires(spark, tmp_path):
             [(cx, cy, i) for i in range(n)], "cell_x int, cell_y int, doc_id long"
         ).coalesce(1).write.mode("append").parquet(src)
 
+    def rows(cx, cy):
+        got = spark.table("ttl_mem").toPandas()
+        return got[(got.cell_x == cx) & (got.cell_y == cy)]
+
+    def poll(cond, deadline):
+        while time.time() < deadline:
+            hit = cond()
+            if len(hit):
+                return hit
+            time.sleep(0.5)
+        return None
+
     feed(1, 1, 5)  # the cell that will go quiet
     stream = spark.readStream.schema(
         "cell_x int, cell_y int, doc_id long").parquet(src)
@@ -152,31 +165,38 @@ def test_ring_state_ttl_eviction_fires(spark, tmp_path):
         GroupStateTimeout.ProcessingTimeTimeout)
     q = res.writeStream.format("memory").queryName("ttl_mem") \
         .outputMode("update").trigger(processingTime="1 second").start()
+    stop = threading.Event()
+
+    def heartbeat(period=1.0):
+        # heartbeat traffic on ANOTHER cell only, on a fixed schedule:
+        # a slow feed write shortens the next wait instead of pushing
+        # every later beat back, so the live cell never goes quiet for
+        # the 3 s TTL while the test polls
+        due = time.time()
+        while not stop.wait(max(0.0, due - time.time())):
+            feed(2, 2, 1)
+            due += period
+
+    beat = threading.Thread(target=heartbeat, daemon=True)
+    beat.start()
     try:
-        evicted = None
         deadline = time.time() + 90
-        beat = 0
-        while time.time() < deadline:
-            time.sleep(2)
-            beat += 1
-            feed(2, 2, 1)  # heartbeat traffic on ANOTHER cell only
-            got = spark.table("ttl_mem").toPandas()
-            ev = got[(got.cell_x == 1) & (got.cell_y == 1) & got.evicted]
-            if len(ev):
-                evicted = ev
-                break
+        evicted = poll(lambda: rows(1, 1).query("evicted"), deadline)
         assert evicted is not None, "TTL eviction never fired"
         # the eviction row reports the full count the cell had loaded
         assert evicted.n_docs.iloc[0] == 5
-        got = spark.table("ttl_mem").toPandas()
         # the quiet cell was updated (non-evicted) before the eviction
-        pre = got[(got.cell_x == 1) & (got.cell_y == 1) & ~got.evicted]
+        pre = rows(1, 1).query("not evicted")
         assert len(pre) >= 1 and (pre.n_docs == 5).all()
         # the live cell kept accumulating, never evicted mid-traffic
-        live = got[(got.cell_x == 2) & (got.cell_y == 2)]
-        assert len(live) >= 1 and not live.evicted.any()
+        live = poll(lambda: rows(2, 2), deadline)
+        assert live is not None, "heartbeat cell never reached the sink"
+        assert not live.evicted.any()
     finally:
+        stop.set()
+        beat.join(timeout=60)
         q.stop()
+    assert not beat.is_alive()
 
 
 def test_streaming_hll_registers_finalize_equals_batch(spark, tmp_path):
