@@ -359,7 +359,8 @@ def q_quadkey(spark: SparkSession, sf_dir: str) -> DataFrame:
     web-map tile-server interop encoding (parent tile = key prefix,
     so prefix scans are subtree reads; same bit order as q_morton /
     q_qt_assign, whose codes are already driver-gated — this is their
-    string re-encoding, so it sits at the head of the harness tail).
+    string re-encoding, gated in the driver window since the round-6
+    rotation).
     Pure JVM concat of per-level digit lookups; DuckDB twin builds
     the identical string (cells.quadkey_sql)."""
     o = D.objects2d(spark, sf_dir)
@@ -3371,6 +3372,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     enters for q_interval (driver-green r4; the temporal family keeps
     q_coverage and q_peak in the window, the interval join stays
     pytest- and harness-gated).
+    Round-6 rotation: q_quadkey (Bing quadkey strings, never yet
+    driver-gated) enters the window, rotating q_mirror_depth5
+    (driver-green rounds 3-5; the path-tracer family keeps
+    q_diffuse_bounce and q_refract_chain in the window).
     Round-4 history: the 17
     previously-ungated queries (q_interval ... q_hist_refresh)
     entered the window and went driver-green; 17 round-1-3 basics
@@ -3384,7 +3389,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_knn": q_knn,
         "q_raster": q_raster,
         "q_oct_capacity": q_oct_capacity,
-        "q_mirror_depth5": q_mirror_depth5,
+        "q_quadkey": q_quadkey,
         "q_diffuse_bounce": q_diffuse_bounce,
         "q_refract_chain": q_refract_chain,
         "q_curate": q_curate,
@@ -3434,7 +3439,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # --- tail (past the driver's 50-row window; harness-verified,
         #     driver-green in >= 2 prior rounds) ---
         "q_nearest": q_nearest,
-        "q_quadkey": q_quadkey,
+        "q_mirror_depth5": q_mirror_depth5,
         "q_minhash": q_minhash,
         "q_lsh_pairs": q_lsh_pairs,
         "q_embed_topk": q_embed_topk,

@@ -92,25 +92,27 @@ def run_headline() -> dict:
     spreads: dict[str, list[float]] = {}
     total = 0.0
     # warm-up at the smallest sf: codegen compile, file listing, JIT —
-    # measured numbers then reflect steady-state execution
+    # measured numbers then reflect steady-state execution. The noop
+    # sink materializes every output column; count() would let Catalyst
+    # prune the unused projections (and most of the work) away.
+    warm_dir = os.path.join(os.path.dirname(SF_DIR.rstrip("/")), "sf0.001")
     for name in HEADLINE:
         try:
-            qs[name](spark, "/root/testdata/sf0.001").count()
+            qs[name](spark, warm_dir).write.format("noop").mode("overwrite").save()
         except Exception:  # noqa: BLE001
             pass
     for name in HEADLINE:
         fn = qs[name]
         runs = []
-        n = 0
         for _ in range(HEADLINE_REPEATS):
             t0 = time.time()
-            n = fn(spark, SF_DIR).count()  # count() forces full execution
+            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
             runs.append(time.time() - t0)
         best = min(runs)
         times[name] = round(best, 3)
         spreads[name] = [round(x, 3) for x in runs]
         total += best
-        print(f"# {name}: {n} rows, min {best:.2f}s of {spreads[name]}",
+        print(f"# {name}: min {best:.2f}s of {spreads[name]}",
               file=sys.stderr)
     calib_after = _quick_calibration(CPUS)
     drift = (

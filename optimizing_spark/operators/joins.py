@@ -28,11 +28,12 @@
     fold land ahead of the gates.
 - ``knn_join``: O17/O22 — cell-local kNN: ring-expansion candidate
   generation (the 3x3 load ring of WorldPartition::update,
-  hpp:198-204), a fast path when the k-th-distance disc provably fits
-  the searched ring, a bound pass otherwise, and a plan-side starved
-  path whose per-query radius comes from a broadcast occupied-cell
-  summary (no driver loop, no nested-loop join over the objects).
-  Provably exact; checkpoint mode prunes empty branches at runtime.
+  hpp:198-204) in two rounds of one lazy plan. Round 1 rings every
+  query at a density-derived radius and finishes those whose
+  k-th-distance disc provably fits it; round 2 re-rings the rest at a
+  per-query radius that is a plan expression — the disc-cover bound,
+  capped by a bound from a broadcast occupied-cell summary (no driver
+  loop, no nested-loop join over the objects). Provably exact.
 - ``ring_semi_join``: O17 — objects residing in the Chebyshev-<=k ring
   of each query's cell; ``distance_join`` and ``radius_join`` probe the
   same ring (``_ring_cells``).
@@ -50,6 +51,7 @@ from __future__ import annotations
 import math
 
 from pyspark.sql import Column, DataFrame
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..config import Box2
@@ -267,7 +269,7 @@ def polygon_join(
         .drop("cell_x", "cell_y", *box)
 
 
-DIST_JOIN_MAX_FANOUT = 81  # (2r+1)^2 at r=4 — the silent-blow-up guard
+DIST_JOIN_MAX_FANOUT = 81  # copies per row, (2r+1)^2 at r=4 — the silent-blow-up guard
 
 
 def _ring_grid(world: Box2, d: int, depth: int | None,
@@ -294,13 +296,16 @@ def _ring_grid(world: Box2, d: int, depth: int | None,
             math.log2(max(ext / max(d, 1), 1.0))))))
     n, sx, sy = _grid(world, depth)
     r = min(int(-(-d // min(sx, sy))), n - 1)  # ceil, clamped to grid
-    # spatial ring only: st_pair_join's x3 time-bucket ring is not
-    # counted, so its real fan-out is ~1.5x this (half-space explode)
-    fanout = (2 * r + 1) ** 2
+    # copies each probe row becomes: the spatial ring, or st_pair_join's
+    # half-space of the ring x its {-1, 0, 1} time-bucket ring
+    if who == "st_pair_join":
+        form, fanout = "(3(2r+1)^2+1)/2", (3 * (2 * r + 1) ** 2 + 1) // 2
+    else:
+        form, fanout = "(2r+1)^2", (2 * r + 1) ** 2
     if fanout > max_fanout:
         raise ValueError(
-            f"{who} ring fan-out (2r+1)^2 = {fanout} exceeds "
-            f"max_fanout={max_fanout} (d={d}, cell_edge~{min(sx, sy):.0f} "
+            f"{who} ring fan-out {form} = {fanout} copies per row exceeds "
+            f"max_fanout={max_fanout} (d={d}, r={r}, cell_edge~{min(sx, sy):.0f} "
             f"at depth={depth}); pass depth=None to auto-size cells to "
             f"~d (r<=1), choose a shallower depth, or raise max_fanout "
             f"explicitly if the blow-up is intended.")
@@ -387,8 +392,8 @@ def st_pair_join(
     equi-shuffle, exact residuals run only on co-located candidates.
     The half-space explode below makes (3(2r+1)^2 + 1)/2, about
     1.5x(2r+1)^2, copies per event — auto depth keeps r=1 (14
-    copies). `max_fanout` guards the spatial (2r+1)^2 part like
-    distance_join.
+    copies). `max_fanout` caps that copy count, as it caps
+    distance_join's (2r+1)^2.
 
     Streaming twin: streaming/cells_stream.streaming_distance_join is
     the stream-stream form of the same semantics (distance band +
@@ -729,49 +734,39 @@ def knn_join(
     depth: int,
     k: int,
     oversample: int = 8,
-    checkpoint: bool = True,
     broadcast_queries: bool = False,
 ) -> DataFrame:
-    """Exact kNN (queries: query_id, x, y; objects: obj_id, x, y).
+    """Exact kNN (queries: query_id, x, y; objects: obj_id, x, y), as
+    ONE lazy plan: building it runs no Spark job, and the sink runs it
+    as one SQL execution.
 
-    1. Starting ring radius derived from data density inside the plan:
-       the object count rides in via a broadcast 1-row aggregate, and
-       r0 satisfies (2*r0+1)^2 * density >= oversample * k (guarded to
-       1 on an empty table — the unguarded division yields Infinity and
-       an ANSI overflow at F.ceil).
-    2. ONE evaluation of the phase-1 ring join: candidates go through a
-       single window pass producing per-row rank, per-query candidate
-       count and k-th-candidate distance d_k, then (checkpoint=True)
-       an eager localCheckpoint pins the result so the three consumers
-       below read it instead of re-executing the join subtree (the
-       round-2 plan evaluated it ~3x; candidate volume is
-       ~oversample*k rows per query, so the checkpoint is small).
-       The checkpoint (plus the pruning-flags 1-row collect below)
-       serializes one extra tiny job per call; latency-critical
-       callers can pass checkpoint=False to keep the plan fully lazy
-       at the cost of re-evaluating the ring join per consumer.
-    3. Fast path: queries whose d_k-disc ring bound fits inside r0 are
-       provably complete — their top-k is emitted with NO second join.
-    4. Bound pass: satisfied queries whose bound exceeds r0 re-ring at
-       bound radius (guarantees no closer object outside the searched
-       ring is missed).
-    5. Starved queries (< k candidates — density-derived r0 defeated by
-       local skew): per-query radius from a broadcast OCCUPIED-CELL
-       summary (bounded by min(4^depth, #objects) rows — never the
-       object table itself, so no BroadcastNestedLoopJoin over a
-       non-trivial side): the smallest Chebyshev radius whose
-       cumulative cell count reaches k, inflated by the cell-diagonal
-       factor so the k-th-distance disc is provably covered, then one
-       ring join + top-k. The constant-key equi join keeps the plan on
-       BroadcastHashJoin.
+    1. Round 1 rings every query at r0, derived from data density
+       inside the plan: the object count is a scalar subquery, and r0
+       satisfies (2*r0+1)^2 * density >= oversample * k (guarded to 1
+       on an empty table — the unguarded division yields Infinity and
+       an ANSI overflow at F.ceil). One window pass over the candidates
+       gives per-row rank, per-query candidate count and k-th-candidate
+       distance d_k. A query with >= k candidates whose d_k-disc bound
+       fits inside r0 is provably complete: its top-k is emitted here.
+    2. Round 2 covers every other query with ONE ring join + top-k, at
+       radius least(bnd if satisfied, rg). Both are provable upper
+       bounds on the radius that covers the k-th-distance disc:
+       - bnd, the d_k disc-cover bound of a satisfied query;
+       - rg, from a broadcast OCCUPIED-CELL summary (bounded by
+         min(4^depth, #objects) rows — never the object table itself,
+         so no BroadcastNestedLoopJoin over a non-trivial side): the
+         smallest Chebyshev radius whose cumulative cell count reaches
+         k, inflated by the cell-diagonal factor. It is the only bound
+         of a starved query (< k candidates at r0 — density-derived r0
+         defeated by local skew), including one with no candidate.
+       Round 1's stats feed both rounds: over a file-scan input AQE
+       reuses their exchange, so the round-1 ring join runs once, and
+       its empty-relation propagation drops round 2's ring join when
+       every query finished in round 1.
 
     Returns (query_id, obj_id, d2, rank). Ties: obj_id ascending —
     deterministic under any partitioning.
     """
-    import math
-
-    from pyspark.sql import Window as W
-
     n, sx, sy = _grid(world, depth)
     cx, cy = _cell_sql(world, depth, "x", "y")
     o = objects.selectExpr(
@@ -779,16 +774,15 @@ def knn_join(
     q0 = queries.selectExpr(
         "query_id", "x AS qx", "y AS qy", f"{cx} AS qcx", f"{cy} AS qcy")
 
-    def ring_candidates(qdf: DataFrame, radius: Column) -> DataFrame:
-        keep = [c for c in qdf.columns if c not in ("cell_x", "cell_y")]
-        qq = (
-            qdf.withColumn("_r", radius)
-            .withColumn("cell_x", F.explode(F.sequence(
-                F.greatest(F.lit(0), F.col("qcx") - F.col("_r")),
-                F.least(F.lit(n - 1), F.col("qcx") + F.col("_r")))))
-            .withColumn("cell_y", F.explode(F.sequence(
-                F.greatest(F.lit(0), F.col("qcy") - F.col("_r")),
-                F.least(F.lit(n - 1), F.col("qcy") + F.col("_r")))))
+    def ring_candidates(qdf: DataFrame) -> DataFrame:
+        """(query_id, _r, obj_id, d2) of the objects in the grid-clipped
+        Chebyshev-<=_r ring around each query's cell."""
+        qq = qdf.selectExpr(
+            "query_id", "qx", "qy", "qcy", "_r",
+            f"explode(sequence(greatest(0, qcx - _r), least({n - 1}, qcx + _r))) AS cell_x",
+        ).selectExpr(
+            "query_id", "qx", "qy", "_r", "cell_x",
+            f"explode(sequence(greatest(0, qcy - _r), least({n - 1}, qcy + _r))) AS cell_y",
         )
         # broadcast_queries=True is the fast path for the reference
         # workload (a handful of viewport/player queries vs a huge
@@ -800,69 +794,56 @@ def knn_join(
         # where the default shuffle equi-join on cell keys is safe.
         c = (F.broadcast(qq) if broadcast_queries else qq) \
             .join(o, ["cell_x", "cell_y"])
-        ddx = F.col("ox") - F.col("qx")
-        ddy = F.col("oy") - F.col("qy")
-        return c.select(
-            *keep, "obj_id", "ox", "oy",
-            (ddx * ddx + ddy * ddy).alias("d2"),
-        ).drop("_r")
+        return c.selectExpr(
+            "query_id", "_r", "obj_id", "(ox - qx) * (ox - qx) + (oy - qy) * (oy - qy) AS d2")
 
-    # phase 1: density-derived ring radius via a broadcast 1-row count
-    ncount = objects.agg(F.count("*").alias("_N"))
-    density = F.col("_N").cast("double") / F.lit(float(n * n))
+    # round 1: density-derived ring radius from the scalar object count
+    nobj = objects.agg(F.count("*")).scalar()
+    density = nobj.cast("double") / F.lit(float(n * n))
     r0 = F.when(
-        F.col("_N") > 0,
+        nobj > 0,
         F.ceil((F.sqrt(F.lit(float(oversample * k)) / density) - F.lit(1.0)) / 2),
     ).otherwise(F.lit(1))
     r0 = F.greatest(F.lit(1), F.least(F.lit(n - 1), r0)).cast("int")
-    q1 = q0.crossJoin(F.broadcast(ncount)).withColumn("_r0", r0).drop("_N")
-    got = ring_candidates(q1, F.col("_r0"))
-
     wk = W.partitionBy("query_id").orderBy("d2", "obj_id")
     wall = W.partitionBy("query_id")
-    cellw = min(sx, sy)
     stats = (
-        got.withColumn("_rk", F.row_number().over(wk))
+        ring_candidates(q0.withColumn("_r", r0))
+        .withColumn("_rk", F.row_number().over(wk))
         .withColumn("_cnt", F.count("*").over(wall))
         # d_k = k-th candidate distance (or farthest when _cnt < k)
         .withColumn("_dk2", F.max(
             F.when(F.col("_rk") == F.least(F.lit(k), F.col("_cnt")), F.col("d2"))
         ).over(wall))
     )
-    if checkpoint:
-        stats = stats.localCheckpoint()
     # Exact disc-cover bound: a point within Euclid distance d of the
     # query lies in a cell whose per-axis index differs by at most
     # floor(d / cell_axis) + 1 (the +1 absorbs the query's intra-cell
     # offset). floor, NOT ceil+1: the looser form can never be <= r0=1,
     # which silently forced the second ring join for EVERY query.
+    cellw = min(sx, sy)
     bnd = F.least(
         F.lit(n), (F.floor(F.sqrt(F.col("_dk2")) / F.lit(cellw)) + 1).cast("int")
     )
-    sat = (F.col("_cnt") >= k)
-
-    # fast path: the d_k-disc already fits inside the searched ring
-    fast = stats.filter(sat & (bnd <= F.col("_r0")) & (F.col("_rk") <= k)) \
+    sat = F.col("_cnt") >= k
+    fast = stats.filter(sat & (bnd <= F.col("_r")) & (F.col("_rk") <= k)) \
         .select("query_id", "obj_id", "d2", F.col("_rk").alias("rank"))
 
-    # bound pass for satisfied queries whose disc spills past r0
-    redo_q = stats.filter(sat & (bnd > F.col("_r0")) & (F.col("_rk") == 1)) \
-        .select("query_id", "qx", "qy", "qcx", "qcy", bnd.alias("_r2"))
-    redo_cand = ring_candidates(redo_q, F.col("_r2")).drop("_r2")
-    redo = redo_cand.withColumn("rank", F.row_number().over(wk)) \
-        .filter(F.col("rank") <= k).select("query_id", "obj_id", "d2", "rank")
-
-    # starved path: per-query radius from the occupied-cell summary
-    sat_ids = stats.filter(sat & (F.col("_rk") == 1)).select("query_id")
-    starved = q0.join(sat_ids, "query_id", "left_anti")
+    # round 2: the left join keeps the queries with no round-1 candidate
+    # (no stats row, so _bnd is null like any starved query's)
+    todo = q0.join(
+        stats.filter(F.col("_rk") == 1)
+        .select("query_id", "_r", F.when(sat, bnd).alias("_bnd")),
+        "query_id", "left",
+    ).filter(F.col("_bnd").isNull() | (F.col("_bnd") > F.col("_r")))
     csum = o.groupBy("cell_x", "cell_y").agg(F.count("*").alias("_cn"))
-    # bounded cartesian: every starved query sees every occupied cell.
+    # bounded cartesian: every round-2 query sees every occupied cell.
     # The join key is constant-valued but NOT constant-foldable
     # (pmod(col, 1) == 0 has no simplification rule), which keeps the
     # plan on BroadcastHashJoin — "no BroadcastNestedLoopJoin" stays a
     # mechanically checkable invariant of this operator even though a
     # BNLJ over this bounded build side would cost the same.
-    sj = starved.withColumn("_one", F.pmod(F.col("qcx"), F.lit(1))).join(
+    sj = todo.withColumn("_one", F.pmod(F.col("qcx"), F.lit(1))).join(
         F.broadcast(csum.withColumn("_one", F.pmod(F.col("cell_x"), F.lit(1)))),
         "_one").drop("_one")
     cheb = F.greatest(F.abs(F.col("cell_x") - F.col("qcx")),
@@ -871,47 +852,19 @@ def knn_join(
     wcum = W.partitionBy("query_id").orderBy("_cheb", "cell_x", "cell_y") \
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     sj = sj.withColumn("_cum", F.sum("_cn").over(wcum))
-    rq = sj.groupBy("query_id", "qx", "qy", "qcx", "qcy").agg(
+    sj = sj.groupBy("query_id", "qx", "qy", "qcx", "qcy", "_bnd").agg(
         F.min(F.when(F.col("_cum") >= k, F.col("_cheb"))).alias("_rq"))
     # table smaller than k -> no radius reaches k: full-grid ring
-    rq = rq.withColumn("_rq", F.coalesce(F.col("_rq"), F.lit(n - 1)))
+    rq = F.coalesce(F.col("_rq"), F.lit(n - 1))
     # d_k <= (rq+1) * max_cell * sqrt(2); cells within ceil(d_k/min_cell)+1
     # Chebyshev distance provably cover the d_k disc
     diag = max(sx, sy) * math.sqrt(2.0) / cellw
-    rq = rq.withColumn(
-        "_rg",
-        F.least(F.lit(n),
-                (F.floor((F.col("_rq") + 1) * F.lit(diag)) + 1).cast("int")),
-    ).drop("_rq")
-    starved_cand = ring_candidates(rq, F.col("_rg")).drop("_rg")
-    starved_out = starved_cand.withColumn("rank", F.row_number().over(wk)) \
-        .filter(F.col("rank") <= k).select("query_id", "obj_id", "d2", "rank")
-
-    if not checkpoint:
-        return fast.unionByName(redo).unionByName(starved_out)
-
-    # Runtime branch pruning on the materialized stats — the same
-    # empty-relation propagation AQE applies inside a stage, extended
-    # across the checkpoint boundary AQE cannot see: one tiny job over
-    # the checkpointed candidates decides whether the redo / starved
-    # branches exist at all. In the common (near-uniform density) case
-    # both counts are 0 and the returned plan makes ZERO further passes
-    # over the object table (no occupied-cell summary, no second ring).
-    flags = stats.filter(F.col("_rk") == 1).agg(
-        F.coalesce(F.sum(F.when(sat & (bnd > F.col("_r0")), 1)), F.lit(0))
-        .alias("n_redo"),
-        F.coalesce(F.sum(F.when(sat, 1)), F.lit(0)).alias("n_sat"),
-    ).collect()[0]
-    out = fast
-    if flags["n_redo"] > 0:
-        out = out.unionByName(redo)
-    # starved probe: one anti-join against the checkpointed sat set —
-    # exact under duplicate query ids and never re-executes anything
-    # beyond the queries scan itself (a queries.count() comparison
-    # would miscount duplicates and pay the same scan anyway)
-    if not starved.isEmpty():
-        out = out.unionByName(starved_out)
-    return out
+    rg = F.least(F.lit(n), (F.floor((rq + 1) * F.lit(diag)) + 1).cast("int"))
+    # least() skips nulls: a starved query's radius is rg alone
+    second = ring_candidates(sj.withColumn("_r", F.least(F.col("_bnd"), rg)))
+    return fast.unionByName(
+        second.withColumn("rank", F.row_number().over(wk))
+        .filter(F.col("rank") <= k).select("query_id", "obj_id", "d2", "rank"))
 
 
 def nearest_hit_xy(queries: DataFrame, objects: DataFrame) -> DataFrame:

@@ -238,17 +238,15 @@ def test_knn_pathological_skew_exact_no_bnlj(spark):
 
 
 def test_knn_lazy_mode_matches_oracle(spark):
-    """checkpoint=False keeps knn_join a single fully-lazy plan (no
-    driver actions — the shape streaming/compose-into-bigger-plan
-    callers need); it must stay exact, including its un-pruned starved
-    branch."""
+    """knn_join is a single fully-lazy plan (no driver actions — the
+    shape streaming/compose-into-bigger-plan callers need); it must stay
+    exact, including its second round."""
     k = 4
     objs = datagen.spark_table(spark, "quadtree_objects", 1500, partitions=4)
     qpdf = datagen.quadtree_objects_pandas(40, seed=13)[["obj_id", "x", "y"]] \
         .rename(columns={"obj_id": "query_id"})
     qs = spark.createDataFrame(qpdf)
-    got = joins.knn_join(qs, objs, QT_BENCH_WORLD, depth=5, k=k,
-                         checkpoint=False).toPandas()
+    got = joins.knn_join(qs, objs, QT_BENCH_WORLD, depth=5, k=k).toPandas()
     opdf = datagen.quadtree_objects_pandas(1500)
     want = oracle.knn_oracle(
         qpdf.x.to_numpy(), qpdf.y.to_numpy(),
@@ -271,10 +269,111 @@ def test_knn_empty_objects_graceful(spark):
     qpdf = datagen.quadtree_objects_pandas(5, seed=2)[["obj_id", "x", "y"]] \
         .rename(columns={"obj_id": "query_id"})
     qs = spark.createDataFrame(qpdf)
-    for cp in (True, False):
-        got = joins.knn_join(qs, objs, QT_BENCH_WORLD, depth=5, k=3,
-                             checkpoint=cp)
-        assert got.count() == 0
+    got = joins.knn_join(qs, objs, QT_BENCH_WORLD, depth=5, k=3)
+    assert got.count() == 0
+
+
+def test_knn_join_build_starts_no_job(spark):
+    """Building the kNN plan runs nothing: the object count is a scalar
+    subquery and no branch is decided by a driver-side probe."""
+    objs = datagen.spark_table(spark, "quadtree_objects", 500, partitions=2)
+    qs = spark.createDataFrame(
+        datagen.quadtree_objects_pandas(10, seed=3)[["obj_id", "x", "y"]]
+        .rename(columns={"obj_id": "query_id"}))
+    sc = spark.sparkContext
+    group = "test_knn_join_build_starts_no_job"
+    sc.setJobGroup(group, "knn_join plan build")
+    try:
+        joins.knn_join(qs, objs, QT_BENCH_WORLD, depth=5, k=3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_knn_fewer_objects_than_k(spark):
+    """3 objects, k=5: no radius reaches k, so every query takes the
+    full-grid ring and returns all 3 objects in oracle order."""
+    import pandas as pd
+
+    opdf = pd.DataFrame({"obj_id": [7, 2, 5], "x": [100.0, 52_000.0, 99_000.0],
+                         "y": [100.0, 48_000.0, 1_000.0]})
+    qpdf = datagen.quadtree_objects_pandas(12, seed=4)[["obj_id", "x", "y"]] \
+        .rename(columns={"obj_id": "query_id"})
+    got = joins.knn_join(spark.createDataFrame(qpdf), spark.createDataFrame(opdf),
+                         QT_BENCH_WORLD, depth=5, k=5).toPandas()
+    want = oracle.knn_oracle(
+        qpdf.x.to_numpy(), qpdf.y.to_numpy(),
+        opdf.x.to_numpy(), opdf.y.to_numpy(), opdf.obj_id.to_numpy(), 5)
+    got_lists = got.sort_values(["query_id", "rank"]) \
+        .groupby("query_id").obj_id.apply(list)
+    assert len(got_lists) == len(qpdf)
+    for qid in range(len(qpdf)):
+        assert len(want[qid]) == 3
+        assert [int(v) for v in got_lists[qid]] == want[qid], f"query {qid}"
+
+
+def _knn_regimes(qx, qy, ox, oy, n, cell, k, oversample):
+    """Which round finishes each query, by knn_join's own rule: 'fast'
+    (>= k candidates in the r0 ring and the d_k disc fits it), 'bound'
+    (>= k candidates, disc spills past r0) or 'starved' (< k)."""
+    density = len(ox) / (n * n)
+    r0 = min(n - 1, max(1, int(np.ceil((np.sqrt(oversample * k / density) - 1) / 2))))
+    ocx = np.clip(ox // cell, 0, n - 1)
+    ocy = np.clip(oy // cell, 0, n - 1)
+    out = []
+    for x, y in zip(qx, qy):
+        qcx, qcy = min(n - 1, int(x // cell)), min(n - 1, int(y // cell))
+        ring = np.maximum(np.abs(ocx - qcx), np.abs(ocy - qcy)) <= r0
+        d2 = np.sort((ox[ring] - x) ** 2 + (oy[ring] - y) ** 2)
+        if len(d2) < k:
+            out.append("starved")
+        else:
+            bnd = min(n, int(np.floor(np.sqrt(d2[k - 1]) / cell)) + 1)
+            out.append("fast" if bnd <= r0 else "bound")
+    return out
+
+
+def test_knn_mixed_regimes_match_oracle(spark):
+    """A pytest-sized copy of the perfbench kNN input: uniform objects
+    with an empty void square plus a dense hot cluster, queries in the
+    cluster, deep in the void and near its edge — one call holds
+    queries finished in round 1 (fast), satisfied queries re-ringed at
+    their disc bound, and starved ones (some with no round-1 candidate
+    at all); every answer equals the oracle."""
+    import pandas as pd
+
+    from optimizing_spark.config import POW2_WORLD_2D
+
+    rng = np.random.default_rng(17)
+    depth, k, oversample = 4, 5, 8
+    n, cell = 1 << depth, 65536 // (1 << depth)
+    v0, v1 = 5 * cell, 11 * cell  # 6x6-cell void
+    ox = rng.integers(0, 65536, 2400)
+    oy = rng.integers(0, 65536, 2400)
+    keep = ~((ox >= v0) & (ox < v1) & (oy >= v0) & (oy < v1))
+    ox, oy = ox[keep], oy[keep]
+    hot = rng.integers(cell, 3 * cell, (600, 2))  # 2x2-cell cluster
+    ox, oy = np.concatenate([ox, hot[:, 0]]), np.concatenate([oy, hot[:, 1]])
+    opdf = pd.DataFrame({"obj_id": np.arange(len(ox)), "x": ox, "y": oy})
+    qx = np.concatenate([rng.integers(cell, 3 * cell, 10),
+                         rng.integers(v0 - cell // 2, v1 + cell // 2, 30)])
+    qy = np.concatenate([rng.integers(cell, 3 * cell, 10),
+                         rng.integers(v0 - cell // 2, v1 + cell // 2, 30)])
+    qpdf = pd.DataFrame({"query_id": np.arange(len(qx)), "x": qx, "y": qy})
+
+    regimes = _knn_regimes(qx, qy, ox, oy, n, cell, k, oversample)
+    assert {"fast", "bound", "starved"} <= set(regimes), regimes
+
+    got = joins.knn_join(spark.createDataFrame(qpdf), spark.createDataFrame(opdf),
+                         POW2_WORLD_2D, depth=depth, k=k, oversample=oversample).toPandas()
+    want = oracle.knn_oracle(qx, qy, ox, oy, opdf.obj_id.to_numpy(), k)
+    got_lists = got.sort_values(["query_id", "rank"]) \
+        .groupby("query_id").obj_id.apply(list)
+    assert len(got) == k * len(qpdf)
+    for qid in range(len(qpdf)):
+        assert [int(v) for v in got_lists[qid]] == want[qid], \
+            f"query {qid} ({regimes[qid]})"
 
 
 def _convex_polys(rng, n_polys, world=65536):
@@ -612,6 +711,19 @@ def test_distance_join_fanout_guard():
         # depth=12 -> cell_edge=16, d=2500 -> r=157: must refuse
         # (the guard fires before any DataFrame is touched)
         joins.distance_join(None, 2500, world, depth=12)
+
+
+def test_ring_fanout_guard_counts_copies_per_row(spark):
+    """The guard compares the copies each probe row really becomes. At
+    r=4 (d=4000, depth 6, 1024-wide cells) st_pair_join's half-space of
+    the ring x 3 time buckets is (3*81+1)/2 = 122 copies > 81 and must
+    raise; distance_join's plain ring is 81 <= 81 and must build."""
+    world = Box2(0.0, 0.0, 65536.0, 65536.0)
+    with pytest.raises(ValueError, match=r"fan-out .* = 122 copies per row"):
+        joins.st_pair_join(None, 4000, 60, world, depth=6)
+    pts = spark.createDataFrame([(0, 10, 10), (1, 20, 20)],
+                                "point_id long, x long, y long")
+    assert joins.distance_join(pts, 4000, world, depth=6).count() == 1
 
 
 def test_distance_join_d_exceeds_world(spark):
