@@ -17,11 +17,11 @@ The reference's trees become columns here:
   (DynamicOctree.hpp:126-144) used by operators.tiling's refinement
   loop. Child order SWD,SED,NWD,NED,SWU,SEU,NWU,NEU (x fastest, then
   y, then z — DynamicOctree.hpp:56-65,87-94), closed containment.
-- ``kring_offsets``: 3x3 (2D) / 27-cell (3D) neighbor rings
-  (WorldPartition.hpp:194-213) for kNN candidate generation.
 - ``grid_cell_sql``: the clamped fixed-depth grid cell index, as Spark
   SQL text — the equi-join key of every cell-mode join and of
-  operators.tiling.explode_covering_cells.
+  operators.tiling.explode_covering_cells. The Chebyshev neighbor ring
+  around a grid cell (WorldPartition.hpp:194-213) is explode-based
+  SQL text in ``operators.joins._ring_cells``.
 
 Everything is float64; midpoints are computed by recursive halving
 (min + (max-min)*0.5, matching BoundaryBox.hpp:63 / resize()) so the
@@ -113,14 +113,6 @@ def morton3d(ix: Column, iy: Column, iz: Column) -> Column:
     (DynamicOctree.hpp:56-65: index = bx + 2*by + 4*bz)."""
     return _spread3(ix).bitwiseOR(F.shiftleft(_spread3(iy), 1)).bitwiseOR(
         F.shiftleft(_spread3(iz), 2))
-
-
-def grid_coord(v: Column, world_min: float, world_edge: float, bits: int) -> Column:
-    """Scale a float coordinate into an integer grid coordinate in
-    [0, 2^bits - 1] (clamped)."""
-    n = 1 << bits
-    i = F.floor((v - F.lit(world_min)) / F.lit(world_edge) * F.lit(n))
-    return F.greatest(F.lit(0), F.least(F.lit(n - 1), i)).cast("long")
 
 
 def grid_cell_sql(v: str, wmin: float, s: float, n: int) -> str:
@@ -632,7 +624,8 @@ def hex_cell_sql(px: str, py: str, w: int = HEX_W, h: int = HEX_H) -> tuple[str,
 
 def hex_neighbor_offsets() -> Column:
     """Array literal of the 6 (dq, dr) hex-neighbor offsets — the hex
-    analog of the square 3x3 kring (WorldPartition.hpp:198-204): the
+    analog of the square 3x3 ring (WorldPartition.hpp:198-204,
+    operators.joins._ring_cells): the
     two same-lattice side neighbors (+-2, 0) and the four other-lattice
     diagonal neighbors (+-1, +-1); at h/w ~ sqrt(3) all six centers sit
     at (near-)equal distance 2w."""
@@ -641,26 +634,6 @@ def hex_neighbor_offsets() -> Column:
         F.struct(F.lit(dq).alias("dq"), F.lit(dr).alias("dr"))
         for dq, dr in offs
     ])
-
-
-# ---------------------------------------------------------------------------
-# Neighbor rings (WorldPartition.hpp:194-213)
-# ---------------------------------------------------------------------------
-
-def kring_offsets(k: int = 1, dims: int = 2) -> Column:
-    """Array literal of (dx, dy[, dz]) offsets of the Chebyshev-<=k ring;
-    explode against a cell coordinate to enumerate neighbor cells —
-    the 3x3 load ring of WorldPartition::update (hpp:198-204)."""
-    rng = range(-k, k + 1)
-    if dims == 2:
-        offs = [F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                for dx in rng for dy in rng]
-    else:
-        offs = [
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"), F.lit(dz).alias("dz"))
-            for dx in rng for dy in rng for dz in rng
-        ]
-    return F.array(*offs)
 
 
 def prefix_at_depth(

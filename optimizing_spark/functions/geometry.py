@@ -79,29 +79,12 @@ def overlaps(a: BoxCols, b: BoxCols) -> Column:
     return p
 
 
-def contains_box(a: BoxCols, b: BoxCols) -> Column:
-    """Closed box-in-box containment (BoundaryBox.hpp:52-56)."""
-    a0x, a0y, a1x, a1y, *az = a.cols()
-    b0x, b0y, b1x, b1y, *bz = b.cols()
-    p = (a0x <= b0x) & (a1x >= b1x) & (a0y <= b0y) & (a1y >= b1y)
-    if a.is3d and b.is3d:
-        p = p & (az[0] <= bz[0]) & (az[1] >= bz[1])
-    return p
-
-
 # ---- 2D rect conventions (.Test/QuadTree.cpp) ----
 
 def rect_contains_point(r: BoxCols, x, y) -> Column:
     """min-closed / max-strict (.Test/QuadTree.cpp:36-42)."""
     r0x, r0y, r1x, r1y = r.cols()[:4]
     return (_c(x) >= r0x) & (_c(y) >= r0y) & (_c(x) < r1x) & (_c(y) < r1y)
-
-
-def rect_contains_rect(r: BoxCols, o: BoxCols) -> Column:
-    """other.min >= this.min AND other.max < this.max (.Test/QuadTree.cpp:44-56)."""
-    r0x, r0y, r1x, r1y = r.cols()[:4]
-    o0x, o0y, o1x, o1y = o.cols()[:4]
-    return (o0x >= r0x) & (o0y >= r0y) & (o1x < r1x) & (o1y < r1y)
 
 
 def rect_overlaps(query: BoxCols, item: BoxCols) -> Column:

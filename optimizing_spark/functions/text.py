@@ -39,14 +39,6 @@ def token_hash_expr(tok_expr: str) -> str:
     return f"cast(conv(substr(md5({tok_expr}), 1, 15), 16, 10) as bigint)"
 
 
-def token_hashes_col(text: str = "text", mod: int = MERSENNE31) -> Column:
-    """Array of h'(token) for minhash/simhash (order preserved)."""
-    return F.expr(
-        f"transform(filter(split(trim({text}), '\\\\s+'), t -> t != ''), "
-        f"t -> {token_hash_expr('t')} % {mod})"
-    )
-
-
 def shingles_sql(text: str = "text", k: int = 3) -> str:
     """SQL fragment: word k-gram shingle strings (space-joined). Spark
     arrays are 0-indexed via element_at(arr, i+1); we use bracket-free

@@ -43,9 +43,8 @@ def minhash_signatures(
 
 
 def _band_keys(sig: DataFrame, key: str, bands: int, rows: int) -> DataFrame:
-    """(key, band, band_hash) keys of the minhash banding — the ONE
-    definition shared by minhash_lsh_pairs and lsh_band_stats, so the
-    bucket dashboard provably describes the operator's actual buckets."""
+    """(key, band, band_hash) keys of the minhash banding used by
+    minhash_lsh_pairs."""
     return sig.select(
         F.col(key),
         F.posexplode(
@@ -57,31 +56,6 @@ def _band_keys(sig: DataFrame, key: str, bands: int, rows: int) -> DataFrame:
     ).withColumn("band_hash", F.expr(
         "aggregate(band_sig, cast(7 as bigint), (acc, x) -> (acc * 1048573 + x) % 2147483647)"
     )).drop("band_sig")
-
-
-def lsh_band_stats(
-    df: DataFrame,
-    text: str = "text",
-    key: str = "doc_id",
-    n_perms: int = 16,
-    bands: int = 4,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """Bucket-size histogram of the minhash-LSH banding — the text-dedup
-    twin of similarity.band_bucket_stats: one row per (band,
-    bucket_size) with the number of buckets that size. Buckets larger
-    than minhash_lsh_pairs' max_bucket_rows are the ones its hot
-    fallback routes through the equi self-join; this dashboard is how
-    an operator sees them coming at 100 TB."""
-    rows = n_perms // bands
-    sig = minhash_signatures(df.select(key, text), text, n_perms,
-                             k=shingle_k)
-    sig = sig.filter(F.expr("element_at(mh_sig, 1) < 2147483647"))
-    keyed = _band_keys(sig, key, bands, rows)
-    sizes = keyed.groupBy("band", "band_hash").agg(
-        F.count("*").alias("bucket_size"))
-    return sizes.groupBy("band", "bucket_size").agg(
-        F.count("*").alias("n_buckets"))
 
 
 def _bucket_pairs(

@@ -762,7 +762,8 @@ def knn_join(
        Round 1's stats feed both rounds: over a file-scan input AQE
        reuses their exchange, so the round-1 ring join runs once, and
        its empty-relation propagation drops round 2's ring join when
-       every query finished in round 1.
+       every query finished in round 1. Over a cached object table (an
+       InMemoryRelation) AQE does not reuse it, and round 1 runs twice.
 
     Returns (query_id, obj_id, d2, rank). Ties: obj_id ascending —
     deterministic under any partitioning.

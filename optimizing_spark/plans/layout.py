@@ -83,10 +83,6 @@ def write_bucketed(
     )
 
 
-def has_shuffle(df: DataFrame) -> bool:
-    return "Exchange" in df._jdf.queryExecution().executedPlan().toString()
-
-
 def pruning_report(df: DataFrame, execute: bool = True) -> dict:
     """Scan metrics (files/partitions actually read) from THIS df's
     executed plan. NB: df.count() would build a separate plan whose

@@ -389,19 +389,6 @@ def documents_spark_fast(
     return rng.mapInArrow(gen, DOCS_SCHEMA)
 
 
-def rays_spark(
-    spark: SparkSession, width: int = 64, height: int = 64, samples: int = 4,
-    seed: int = 42, partitions: int | None = None,
-) -> DataFrame:
-    total = width * height * samples
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids = b["id"].to_numpy(dtype=np.uint64)
-            yield rays_pandas(width, height, samples, seed, ids=ids)
-
-    rng = spark.range(0, total, numPartitions=partitions) if partitions else spark.range(0, total)
-    return rng.mapInPandas(gen, RAYS_SCHEMA)
 def camera_rays_pandas(
     width: int = 256, height: int = 256, subpixels: int = 2,
     samples: int = 16, seed: int = 42, ids: np.ndarray | None = None,
@@ -516,87 +503,3 @@ def cornell_scene_pandas() -> pd.DataFrame:
     return pd.DataFrame(rows, columns=[
         "obj_id", "cx", "cy", "cz", "radius", "emit", "albedo",
         "material", "shape"])
-
-
-CURATION_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.StringType()),
-    T.StructField("text", T.StringType()),
-])
-
-
-def curation_docs_pandas(
-    n: int, seed: int = 42, ids: np.ndarray | None = None,
-    tokens_per_doc: int = 24, vocab: int = 50000,
-    exact_dup_mod: int = 17, near_dup_mod: int = 13,
-    hot_cluster: int = 0,
-) -> pd.DataFrame:
-    """Curation-stress corpus: ~tokens_per_doc word docs over a
-    ``vocab``-word vocabulary seeded with English stopwords (so the
-    quality/lang gates of curate_corpus pass for normal docs), with
-    PLANTED duplication:
-
-    - ids where id %% exact_dup_mod == 1 (id>0) repeat the TEXT of
-      id-1 verbatim (exact-dup band),
-    - ids where id %% near_dup_mod == 2 (id>1) copy id-2's tokens and
-      mutate ONE token (near-dup band — verified jaccard ~ (k-1)/k),
-    - the first ``hot_cluster`` ids all derive from id 0: one in 20
-      carries a single mutated token (near-dups), the rest are exact
-      copies — one giant duplication cluster whose LSH buckets exceed
-      any per-bucket cap in EVERY band (exact copies share all band
-      hashes), the hot-bucket fallback stressor. Mutating every member
-      would spread the cluster across buckets (~36%/band survive a
-      1-token edit) AND quadratically inflate the verify stage.
-
-    Pure NumPy + one Python join per row; deterministic in ids/seed.
-    """
-    i = np.arange(n, dtype=np.uint64) if ids is None else ids.astype(np.uint64)
-    ii = i.astype(np.int64)
-    stop = np.array(["the", "a", "of", "and", "in", "to"])
-
-    def toks_for(base_ids: np.ndarray) -> np.ndarray:
-        """(rows, tokens_per_doc) token grid derived from base ids."""
-        cols = []
-        for j in range(tokens_per_doc):
-            h = _h(base_ids.astype(np.uint64), seed, 400 + j)
-            if j % 5 == 0:  # every 5th slot: an English stopword
-                cols.append(stop[(h % np.uint64(len(stop))).astype(np.int64)])
-            else:
-                ws = (h % np.uint64(vocab)).astype(np.int64)
-                cols.append(np.char.add("w", ws.astype(str)))
-        return np.stack(cols, axis=1)
-
-    base = ii.copy()
-    exact = (ii % exact_dup_mod == 1) & (ii > 0)
-    near = (ii % near_dup_mod == 2) & (ii > 1) & ~exact
-    cluster = ii < hot_cluster
-    base[exact] = ii[exact] - 1
-    base[near] = ii[near] - 2
-    base[cluster] = 0
-    grid = toks_for(base)
-    # near-dup + cluster members: mutate one token (position + word
-    # derived from the ORIGINAL id, so mutations differ per member)
-    mut = near | (cluster & (ii > 0) & (ii % 20 == 3))
-    if mut.any():
-        mi = ii[mut].astype(np.uint64)
-        pos = (_h(mi, seed, 777) % np.uint64(tokens_per_doc)).astype(np.int64)
-        word = np.char.add("m", (_h(mi, seed, 778) % np.uint64(vocab)).astype(np.int64).astype(str))
-        rows = np.nonzero(mut)[0]
-        grid[rows, pos] = word
-    texts = [" ".join(row) for row in grid]
-    return pd.DataFrame({
-        "doc_id": [f"doc-{int(v):012d}" for v in ii],
-        "text": texts,
-    })
-
-
-def curation_docs_spark(
-    spark: SparkSession, n: int, seed: int = 42,
-    partitions: int | None = None, **kwargs,
-) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids = b["id"].to_numpy(dtype=np.uint64)
-            yield curation_docs_pandas(n, seed, ids=ids, **kwargs)
-
-    rng = spark.range(0, n, numPartitions=partitions) if partitions else spark.range(0, n)
-    return rng.mapInPandas(gen, CURATION_SCHEMA)

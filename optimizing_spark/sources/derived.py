@@ -165,21 +165,6 @@ def seg_cross_sql(cx: str, cy: str) -> str:
     return f"((x2 - x1) * (({cy}) - y1) - (y2 - y1) * (({cx}) - x1))"
 
 
-def seg_box_pred_sql() -> str:
-    """Full exact SAT predicate (bbox overlap + corner straddle) over
-    SQL_SEGMENTS x SQL_QUERY_BOXES columns."""
-    c1 = seg_cross_sql("q_min_x", "q_min_y")
-    c2 = seg_cross_sql("q_min_x", "q_max_y")
-    c3 = seg_cross_sql("q_max_x", "q_min_y")
-    c4 = seg_cross_sql("q_max_x", "q_max_y")
-    return (
-        "LEAST(x1, x2) <= q_max_x AND GREATEST(x1, x2) >= q_min_x"
-        " AND LEAST(y1, y2) <= q_max_y AND GREATEST(y1, y2) >= q_min_y"
-        f" AND LEAST({c1}, {c2}, {c3}, {c4}) <= 0"
-        f" AND GREATEST({c1}, {c2}, {c3}, {c4}) >= 0"
-    )
-
-
 def star_polygons(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One CONCAVE 8-vertex star per supplier: the q_pip_poly diamond's
     axis spikes (radius ex/ey) alternating with pulled-in diagonal
@@ -485,23 +470,6 @@ def qt_fits_depth_sql(max_node_depth: int = 4, world_bits: int = B) -> str:
             f"AND (iy >> {sh}) = ((iy + sy) >> {sh}) AND (iy + sy) < {e} THEN {d}"
         )
     return "CASE " + " ".join(whens) + " ELSE 0 END"
-
-
-def qt_depth_col(max_node_depth: int = 4):
-    """Spark twin of qt_fits_depth_sql."""
-    expr = F.lit(0)
-    col = None
-    for d in range(1, max_node_depth + 1):
-        sh = B - d
-        fits = (
-            (F.shiftright(F.col("ix"), sh) == F.shiftright(F.col("ix") + F.col("sx"), sh))
-            & (F.col("ix") + F.col("sx") < E)
-            & (F.shiftright(F.col("iy"), sh) == F.shiftright(F.col("iy") + F.col("sy"), sh))
-            & (F.col("iy") + F.col("sy") < E)
-        )
-        expr = F.when(fits, F.lit(d)).otherwise(expr)
-    col = expr
-    return col
 
 
 def objects3d(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -10,8 +10,10 @@ geometry (sources/derived.py) scales naturally: coordinates are
 key-arithmetic mod 65536, so new keys => new well-spread positions.
 
 Then runs every `__spark_entry__.queries()` entry at sf1, recording
-per-query wall time, result rows, and spill (memory/disk bytes spilled,
-from the Spark REST API) — plus a DuckDB oracle value-compare on a
+per-query wall time of writing the whole result to the ``noop`` sink,
+disk bytes spilled by that run (from the session's event log, parsed
+by ``perfbench.eventlog``) and result rows (counted after the timed
+run) — plus a DuckDB oracle value-compare on a
 WHITELIST of queries whose DuckDB side stays tractable at sf1
 (the cap the round-4 verdict sanctions: q_curate's DuckDB twin alone
 took 604 s at sf0.1; recursive-CTE / window-unroll twins scale worse
@@ -33,14 +35,19 @@ from __future__ import annotations
 import json
 import os
 import sys
+import shutil
 import time
-import urllib.request
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from perfbench.eventlog import EventLog, read_events  # noqa: E402
+from perfbench.trace import tag  # noqa: E402
 
 SRC = os.environ.get("SPARK_GRAFT_SF01", "/root/testdata/sf0.1")
 DST = os.environ.get("SPARK_GRAFT_SF1", "/tmp/sf1")
 COPIES = 10
+EVENTLOG = os.path.join(ROOT, ".bench_work", "sf1_sweep", "eventlog")
 
 # per-copy key offsets: stride > max key at sf0.1, clean powers of 10
 OFFSETS: dict[str, dict[str, int]] = {
@@ -62,14 +69,14 @@ SKIP = {
                        "O(N^2) by design — pinned to gate scale",
     "q_ripley": "gate radii (250..3000) are density-pinned: at sf1 "
                 "r_max=3000 means ~9.9k neighbours/point = 7.4B "
-                "materialized pairs. The 100x evidence is bench "
-                "--ripley (20M points, scale-appropriate radii 4..16)",
+                "materialized pairs. The scale evidence is BENCH.md's "
+                "bench --ripley row (20M points, radii 4..16)",
     "q_visibility": "the dense 8192-edge subworld fold makes sight "
                     "density scale with n: at sf1 d=400 means ~11k "
                     "sight candidates/point = ~8B pairs. The scale "
-                    "evidence for its building blocks is bench "
-                    "--ripley (distance_join) + bench --segseg "
-                    "(crossing join, 2.37B candidates)",
+                    "evidence for its building blocks is BENCH.md's "
+                    "bench --ripley (distance_join) and bench --segseg "
+                    "(crossing join, 2.37B candidates) rows",
 }
 
 # queries whose DuckDB twin stays tractable at sf1 (no recursive CTE,
@@ -110,24 +117,6 @@ def build() -> None:
     spark.stop()
 
 
-def _spill() -> tuple[int, int] | tuple[None, None]:
-    """(mem, disk) bytes spilled across completed stages, or
-    (None, None) when the UI REST scrape fails (port taken by a
-    straggler, UI disabled, ...): a recorded 0 must mean MEASURED
-    zero — a 'zero spill' headline produced by a dead scrape would be
-    vacuous."""
-    base = "http://localhost:4040/api/v1"
-    try:
-        apps = json.load(urllib.request.urlopen(f"{base}/applications"))
-        app = apps[0]["id"]
-        stages = json.load(urllib.request.urlopen(
-            f"{base}/applications/{app}/stages?status=complete"))
-        return (sum(s.get("memoryBytesSpilled", 0) for s in stages),
-                sum(s.get("diskBytesSpilled", 0) for s in stages))
-    except Exception:
-        return (None, None)
-
-
 def run(names: list[str] | None = None) -> dict:
     """Sweep the named queries (all when ``names`` is empty) and
     oracle-check the whitelisted ones among them."""
@@ -138,9 +127,13 @@ def run(names: list[str] | None = None) -> dict:
     from optimizing_spark.session import get_spark
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    shutil.rmtree(EVENTLOG, ignore_errors=True)
+    os.makedirs(EVENTLOG)
     spark = get_spark("sf1_sweep", cores=cpus,
                       shuffle_partitions=max(64, cpus * 2),
-                      extra={"spark.ui.enabled": "true"})
+                      extra={"spark.eventLog.enabled": "true", "spark.eventLog.dir": EVENTLOG,
+                             "spark.eventLog.compress": "false"})
+    sc = spark.sparkContext
     con = duckdb.connect()
     for t in OFFSETS:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
@@ -151,28 +144,26 @@ def run(names: list[str] | None = None) -> dict:
         qs = {n: qs[n] for n in names}
     report: dict = {"sf": 1.0, "dir": DST, "cpus": cpus,
                     "skipped": SKIP, "queries": {}, "oracle_checked": {}}
-    fails = 0
-    for name, fn in qs.items():
+    fails, ops = 0, {}
+    for op, (name, fn) in enumerate(qs.items()):
         if name in SKIP:
             continue
-        m0, d0 = _spill()
+        sc.setJobGroup(tag(op, 0), name)
         t0 = time.time()
         try:
-            rows = fn(spark, DST).count()
+            fn(spark, DST).write.format("noop").mode("overwrite").save()
             wall = time.time() - t0
-            m1, d1 = _spill()
-            scraped = None not in (m0, d0, m1, d1)
-            report["queries"][name] = {
-                "rows": rows, "wall_sec": round(wall, 2),
-                "mem_spill_mb": round((m1 - m0) / 1e6, 1) if scraped else None,
-                "disk_spill_mb": round((d1 - d0) / 1e6, 1) if scraped else None,
-            }
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            rows = fn(spark, DST).count()
+            report["queries"][name] = {"rows": rows, "wall_sec": round(wall, 2)}
+            ops[name] = op
             print(f"ok    {name}: rows={rows} ({wall:.1f}s)", flush=True)
         except Exception as ex:  # noqa: BLE001
             fails += 1
             report["queries"][name] = {
                 "error": str(ex).splitlines()[0][:300]}
             print(f"FAIL  {name}: {str(ex).splitlines()[0][:200]}", flush=True)
+    sc.setLocalProperty("spark.jobGroup.id", None)
     for name in ORACLE_WHITELIST:
         if name not in osql or name not in qs or name in SKIP:
             continue
@@ -194,6 +185,11 @@ def run(names: list[str] | None = None) -> dict:
                 "ok": False, "why": str(ex).splitlines()[0][:300]}
             print(f"FAIL  oracle {name}: {str(ex).splitlines()[0][:200]}",
                   flush=True)
+    spark.stop()  # flushes the event log
+    stats = EventLog(read_events(EVENTLOG)).op_stats()
+    for name, op in ops.items():  # None, not 0, when the log holds no job of the run
+        report["queries"][name]["disk_spill_mb"] = (
+            round(stats[op].spill_bytes / 1e6, 1) if op in stats else None)
     report["failures"] = fails
     report["total_wall_sec"] = round(sum(
         q.get("wall_sec", 0) for q in report["queries"].values()), 1)

@@ -376,6 +376,43 @@ def test_knn_mixed_regimes_match_oracle(spark):
             f"query {qid} ({regimes[qid]})"
 
 
+def test_knn_round2_reuses_round1_exchange_over_parquet(spark, tmp_path):
+    """Over a parquet object table AQE reuses round 1's query-keyed
+    exchange in round 2 (the knn_join docstring's claim), so round 1's
+    ring join runs once. Half the queries sit in the uniform part and
+    finish in round 1; the other half sit deep in an empty void and are
+    starved. Neither round's branch is then pruned as empty, so both
+    read the exchange."""
+    import pandas as pd
+
+    from optimizing_spark.config import POW2_WORLD_2D
+
+    rng = np.random.default_rng(23)
+    depth, k = 4, 5
+    cell = 65536 // (1 << depth)
+    v0, v1 = 5 * cell, 11 * cell  # 6x6-cell void
+    ox = rng.integers(0, 65536, 3000)
+    oy = rng.integers(0, 65536, 3000)
+    keep = ~((ox >= v0) & (ox < v1) & (oy >= v0) & (oy < v1))
+    opdf = pd.DataFrame({"obj_id": np.arange(keep.sum()), "x": ox[keep], "y": oy[keep]})
+    spark.createDataFrame(opdf).write.parquet(str(tmp_path / "objects"))
+    qx = np.concatenate([rng.integers(12 * cell, 15 * cell, 8),
+                         rng.integers(v0 + 2 * cell, v1 - 2 * cell, 8)])
+    qy = np.concatenate([rng.integers(12 * cell, 15 * cell, 8),
+                         rng.integers(v0 + 2 * cell, v1 - 2 * cell, 8)])
+    qpdf = pd.DataFrame({"query_id": np.arange(16), "x": qx, "y": qy})
+    regimes = _knn_regimes(qx, qy, opdf.x.to_numpy(), opdf.y.to_numpy(), 1 << depth, cell, k, 8)
+    assert regimes == ["fast"] * 8 + ["starved"] * 8, regimes
+
+    df = joins.knn_join(spark.createDataFrame(qpdf), spark.read.parquet(str(tmp_path / "objects")),
+                        POW2_WORLD_2D, depth=depth, k=k)
+    got = df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    assert "ReusedExchange" in plan, plan
+    assert len(got) == k * len(qpdf)
+
+
 def _convex_polys(rng, n_polys, world=65536):
     """Random convex polygons: sorted angular sweep of points around a
     center — integer coords."""
