@@ -183,7 +183,7 @@ def q_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = D.points(spark, sf_dir).select(
         F.col("point_id"), F.col("px").alias("x"), F.col("py").alias("y"))
     b = _query_boxes_named(spark, sf_dir)
-    out = J.pip_join(p, b, dims=2, closed=True)
+    out = J.pip_join(p, b, dims=2)
     return out.select("query_id", "point_id")
 
 
@@ -231,7 +231,7 @@ def q_hex_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_hex_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hex neighbor-ring load — O17's 3x3 kring re-expressed on the
-    hex grid (cells.hex_neighbor_offsets: self + 6 neighbors): per
+    hex grid (cells.HEX_RING: self + 6 neighbors): per
     query point, count customer points whose hex cell lies in the
     7-cell ring around the query's cell. Equi-join on (hq, hr) after
     exploding the constant offset array on the TINY query side —
@@ -241,17 +241,9 @@ def q_hex_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = p.select(phq.alias("hq"), phr.alias("hr"))
     q = D.knn_queries(spark, sf_dir)
     qhq, qhr = C.hex_cell(F.col("qx"), F.col("qy"))
-    ring = (
-        q.select("query_id", qhq.alias("_q0"), qhr.alias("_r0"))
-        .withColumn("_o", F.explode(F.concat(
-            F.array(F.struct(F.lit(0).alias("dq"), F.lit(0).alias("dr"))),
-            C.hex_neighbor_offsets())))
-        .select(
-            "query_id",
-            (F.col("_q0") + F.col("_o.dq")).alias("hq"),
-            (F.col("_r0") + F.col("_o.dr")).alias("hr"),
-        )
-    )
+    ring = C.neighbor_cells(
+        q.select("query_id", qhq.alias("hq"), qhr.alias("hr")),
+        "hq", "hr", C.HEX_RING, out=("hq", "hr"))
     hits = pts.join(F.broadcast(ring), ["hq", "hr"]).groupBy("query_id").agg(
         F.count("*").alias("n_ring"))
     # hits is bounded by the query count — broadcast the left join too

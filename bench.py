@@ -392,6 +392,10 @@ def run_skew() -> dict:
     conf = spark.conf
     conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    # with coalescing on, AQE packs the 15 cold shuffle partitions into
+    # ~4 tasks nearly as large as the hot one: 5 join tasks whose
+    # slowest is 1.1-1.4x the median, so no variant shows a straggler
+    conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     fact = spark.range(n).select(
         F.col("id").alias("doc_id"), F.lit(4).alias("qt_depth"),
         F.when(F.col("id") < int(n * 0.3), F.lit(hot_code))

@@ -13,15 +13,20 @@ The reference's trees become columns here:
   *contains* the item rect (min-closed/max-strict) while
   depth+1 < max_depth. Pure function of the item box, so it is a
   single projection — no loop, no shuffle.
-- ``octree_step``: one level of the 3D capacity-gated octree descent
-  (DynamicOctree.hpp:126-144) used by operators.tiling's refinement
-  loop. Child order SWD,SED,NWD,NED,SWU,SEU,NWU,NEU (x fastest, then
-  y, then z — DynamicOctree.hpp:56-65,87-94), closed containment.
+- ``octree_child_digit``: the child digit of one level of the 3D
+  capacity-gated octree descent (DynamicOctree.hpp:126-144), used by
+  operators.tiling's refinement loop. Child order
+  SWD,SED,NWD,NED,SWU,SEU,NWU,NEU (x fastest, then y, then z —
+  DynamicOctree.hpp:56-65,87-94), closed containment.
 - ``grid_cell_sql``: the clamped fixed-depth grid cell index, as Spark
   SQL text — the equi-join key of every cell-mode join and of
-  operators.tiling.explode_covering_cells. The Chebyshev neighbor ring
-  around a grid cell (WorldPartition.hpp:194-213) is explode-based
-  SQL text in ``operators.joins._ring_cells``.
+  operators.tiling.explode_covering_cells.
+- ``neighbor_cells``: the one neighbour shift — each row's home cell
+  plus every (dx, dy) of an offset list (``square_offsets(r)``,
+  ``QUEEN8``, ``ROOK4``, ``HEX_RING``), one Generate of SQL text. It
+  is the load ring of WorldPartition::update (WorldPartition.hpp:
+  194-213) behind the ring joins, and the scatter of the raster,
+  autocorrelation and clustering stencils.
 
 Everything is float64; midpoints are computed by recursive halving
 (min + (max-min)*0.5, matching BoundaryBox.hpp:63 / resize()) so the
@@ -131,6 +136,48 @@ def grid_cell_sql(v: str, wmin: float, s: float, n: int) -> str:
     literals (``1024.0D``): a bare ``1024.0`` parses as DECIMAL."""
     return (f"CAST(greatest(0, least({n - 1}, "
             f"floor(({v} - {float(wmin)!r}D) / {float(s)!r}D))) AS INT)")
+
+
+# ---------------------------------------------------------------------------
+# Neighbour shift: the load ring of WorldPartition::update
+# (WorldPartition.hpp:194-213) and every stencil built on it
+# ---------------------------------------------------------------------------
+
+def square_offsets(r: int) -> list[tuple[int, int]]:
+    """The (2r+1)^2 Chebyshev ring, self included."""
+    return [(dx, dy) for dx in range(-r, r + 1) for dy in range(-r, r + 1)]
+
+
+QUEEN8 = [o for o in square_offsets(1) if o != (0, 0)]
+ROOK4 = [(1, 0), (-1, 0), (0, 1), (0, -1)]
+# a hex_cell (hq, hr) cell plus its 6 neighbours: the two same-lattice
+# side neighbours (+-2, 0) and the four other-lattice diagonal ones
+# (+-1, +-1); at h/w ~ sqrt(3) all six centres sit at (near-)equal
+# distance 2w
+HEX_RING = [(0, 0), (2, 0), (-2, 0), (1, 1), (1, -1), (-1, 1), (-1, -1)]
+
+
+def neighbor_cells(df, cx: str, cy: str, offsets, out=("cell_x", "cell_y")):
+    """One row per (row of df, offset): df's columns minus ``out``, plus
+    ``out`` = home cell (SQL text ``cx``, ``cy``, evaluated over df) +
+    offset. The probe side of every ring join and the scatter side of
+    every stencil.
+
+    Two selectExpr calls around ONE ``inline(array(named_struct(...)))``
+    Generate, all SQL text: the build is a fixed handful of Py4J round
+    trips whatever the number of offsets (a Column-tree offset array
+    costs several round trips per offset), and the plan is one
+    Generate under one Project."""
+    ox, oy = out
+    keep = [f"`{c}`" for c in df.columns if c not in out]
+    arr = ", ".join(f"named_struct('_nb_dx', {dx}, '_nb_dy', {dy})"
+                    for dx, dy in offsets)
+    return (
+        df.selectExpr(*keep, f"{cx} AS _nb_cx", f"{cy} AS _nb_cy",
+                      f"inline(array({arr}))")
+        .selectExpr(*keep, f"_nb_cx + _nb_dx AS `{ox}`",
+                    f"_nb_cy + _nb_dy AS `{oy}`")
+    )
 
 
 def coarse_cell(x: Column, z: Column, cell: float) -> tuple[Column, Column]:
@@ -573,7 +620,7 @@ def hex_cell(x: Column, y: Column, w: int = HEX_W, h: int = HEX_H) -> tuple[Colu
     all distances are INTEGER squared Euclidean).
 
     Each of a cell's 6 neighbors differs by (+-2, 0) or (+-1, +-1) in
-    (hq, hr) — see hex_neighbor_offsets. ANSI-safe: squared distances
+    (hq, hr) — see HEX_RING. ANSI-safe: squared distances
     <= w^2 + h^2 < 2^22.
     """
     ia = _floordiv(x + w, 2 * w)
@@ -620,20 +667,6 @@ def hex_cell_sql(px: str, py: str, w: int = HEX_W, h: int = HEX_H) -> tuple[str,
     hq = f"CASE WHEN {da} <= {db} THEN 2 * ({ia}) ELSE 2 * ({ib}) + 1 END"
     hr = f"CASE WHEN {da} <= {db} THEN 2 * ({ja}) ELSE 2 * ({jb}) + 1 END"
     return hq, hr
-
-
-def hex_neighbor_offsets() -> Column:
-    """Array literal of the 6 (dq, dr) hex-neighbor offsets — the hex
-    analog of the square 3x3 ring (WorldPartition.hpp:198-204,
-    operators.joins._ring_cells): the
-    two same-lattice side neighbors (+-2, 0) and the four other-lattice
-    diagonal neighbors (+-1, +-1); at h/w ~ sqrt(3) all six centers sit
-    at (near-)equal distance 2w."""
-    offs = [(2, 0), (-2, 0), (1, 1), (1, -1), (-1, 1), (-1, -1)]
-    return F.array(*[
-        F.struct(F.lit(dq).alias("dq"), F.lit(dr).alias("dr"))
-        for dq, dr in offs
-    ])
 
 
 def prefix_at_depth(

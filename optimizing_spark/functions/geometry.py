@@ -81,12 +81,6 @@ def overlaps(a: BoxCols, b: BoxCols) -> Column:
 
 # ---- 2D rect conventions (.Test/QuadTree.cpp) ----
 
-def rect_contains_point(r: BoxCols, x, y) -> Column:
-    """min-closed / max-strict (.Test/QuadTree.cpp:36-42)."""
-    r0x, r0y, r1x, r1y = r.cols()[:4]
-    return (_c(x) >= r0x) & (_c(y) >= r0y) & (_c(x) < r1x) & (_c(y) < r1y)
-
-
 def rect_overlaps(query: BoxCols, item: BoxCols) -> Column:
     """Asymmetric: q.min < i.max (strict) AND q.max >= i.min (closed)
     (.Test/QuadTree.cpp:58-69; search() passes the query as `this`,

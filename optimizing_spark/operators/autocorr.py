@@ -53,9 +53,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-NEIGHBOR_OFFSETS = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-                    if (dx, dy) != (0, 0)]
-STAR_OFFSETS = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
+from ..functions.cells import QUEEN8, neighbor_cells, square_offsets
 
 
 def _centered(cells: DataFrame, val: str, cx: str, cy: str):
@@ -95,15 +93,8 @@ def spatial_autocorr(
     convention). Columns: n_cells, w_pairs, sum_x, m, r, q1, p1, p2,
     num_geary, moran_i, geary_c."""
     cy_, glob = _centered(cells, val, cx, cy)
-    offs = F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-        for dx, dy in NEIGHBOR_OFFSETS
-    ])
-    left = cy_.select("y", "cx", "cy", F.explode(offs).alias("o")).select(
-        F.col("y").alias("y_i"),
-        (F.col("cx") + F.col("o.dx")).alias("jx"),
-        (F.col("cy") + F.col("o.dy")).alias("jy"),
-    )
+    left = neighbor_cells(cy_.select(F.col("y").alias("y_i"), "cx", "cy"),
+                          "cx", "cy", QUEEN8, out=("jx", "jy"))
     pairs = left.join(
         cy_.select(F.col("cx").alias("jx"), F.col("cy").alias("jy"),
                    F.col("y").alias("y_j")),
@@ -148,7 +139,7 @@ def spatial_autocorr_sql(cells_sql: str, val: str = "n",
     """DuckDB twin: identical integer components, identical float
     epilogue op order — moran_i/geary_c agree with Spark
     bit-for-bit."""
-    offs = ",".join(f"({dx},{dy})" for dx, dy in NEIGHBOR_OFFSETS)
+    offs = ",".join(f"({dx},{dy})" for dx, dy in QUEEN8)
     return f"""
         WITH cells0 AS (
             SELECT CAST({cx} AS BIGINT) AS cx, CAST({cy} AS BIGINT) AS cy,
@@ -241,16 +232,8 @@ def getis_ord_gstar(
     so the identical op order keeps z bit-portable. Returns one row
     per occupied cell: (cx, cy, x, w_i, nbr_y, z)."""
     cy_, glob = _centered(cells, val, cx, cy)
-    offs = F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-        for dx, dy in STAR_OFFSETS
-    ])
-    contrib = cy_.select("y", "cx", "cy", F.explode(offs).alias("o")) \
-        .select(
-            F.col("y").alias("y_j"),
-            (F.col("cx") + F.col("o.dx")).alias("tx"),
-            (F.col("cy") + F.col("o.dy")).alias("ty"),
-        )
+    contrib = neighbor_cells(cy_.select(F.col("y").alias("y_j"), "cx", "cy"),
+                             "cx", "cy", square_offsets(1), out=("tx", "ty"))
     ring = contrib.join(
         cy_.select(F.col("cx").alias("tx"), F.col("cy").alias("ty"),
                    F.col("x")),
@@ -280,7 +263,7 @@ def getis_ord_gstar_sql(cells_sql: str, val: str = "n",
                         cx: str = "cx", cy: str = "cy") -> str:
     """DuckDB twin of getis_ord_gstar: identical integers, identical
     float op order — z agrees bit-for-bit."""
-    offs = ",".join(f"({dx},{dy})" for dx, dy in STAR_OFFSETS)
+    offs = ",".join(f"({dx},{dy})" for dx, dy in square_offsets(1))
     return f"""
         WITH cells0 AS (
             SELECT CAST({cx} AS BIGINT) AS cx, CAST({cy} AS BIGINT) AS cy,

@@ -35,25 +35,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import POW2_WORLD_BITS
+from ..functions.cells import QUEEN8, neighbor_cells, square_offsets
 from .dedup import connected_components
-
-_OFFS8 = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-          if (dx, dy) != (0, 0)]
-_OFFS9 = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
-
-
-def _ring(df: DataFrame, offs: list[tuple[int, int]]) -> DataFrame:
-    """Explode (cx, cy) to cx+dx, cy+dy for each offset."""
-    o = F.explode(F.array(*[
-        F.struct(F.lit(dx).cast("long").alias("dx"),
-                 F.lit(dy).cast("long").alias("dy"))
-        for dx, dy in offs
-    ])).alias("_o")
-    return df.select("*", o).select(
-        *[c for c in df.columns],
-        (F.col("cx") + F.col("_o.dx")).alias("nx"),
-        (F.col("cy") + F.col("_o.dy")).alias("ny"),
-    )
 
 
 def grid_dbscan(
@@ -84,7 +67,8 @@ def grid_dbscan(
         .select("cx", "cy", (F.col("cx") * side + F.col("cy")).alias("cid"))
     )
     # dense-cell adjacency graph (<= 8 edges per dense cell)
-    edges = _ring(dense.select("cid", "cx", "cy"), _OFFS8).join(
+    edges = neighbor_cells(dense.select("cid", "cx", "cy"), "cx", "cy",
+                           QUEEN8, out=("nx", "ny")).join(
         dense.select(F.col("cx").alias("nx"), F.col("cy").alias("ny"),
                      F.col("cid").alias("v")),
         ["nx", "ny"],
@@ -96,7 +80,7 @@ def grid_dbscan(
     core = cells.join(F.broadcast(dense_lbl), ["cx", "cy"]).select(
         F.col(key), F.col("cluster_id").alias("_core"))
     ring_min = (
-        _ring(cells, _OFFS9)
+        neighbor_cells(cells, "cx", "cy", square_offsets(1), out=("nx", "ny"))
         .join(F.broadcast(
             dense_lbl.select(F.col("cx").alias("nx"),
                              F.col("cy").alias("ny"), "cluster_id")),

@@ -1,8 +1,7 @@
 """Spatial joins: the reference's tree traversals as DataFrame joins.
 
-- ``pip_join``: O11/O1 — point-in-box. Broadcast variant for small box
-  sets (query geometries are typically tiny vs the object table), and a
-  cell-bucketed equi-join variant for large box sets.
+- ``pip_join``: O11/O1 — closed point-in-box with the box set
+  broadcast (query geometries are typically tiny vs the object table).
 - The box family — ``range_join`` (O10/O2 box overlap),
   ``polygon_join``, ``polygon_polygon_join``, ``segment_box_join``,
   ``segment_segment_join`` and ``snap_candidates_raw`` — are adapters
@@ -35,8 +34,13 @@
   capped by a bound from a broadcast occupied-cell summary (no driver
   loop, no nested-loop join over the objects). Provably exact.
 - ``ring_semi_join``: O17 — objects residing in the Chebyshev-<=k ring
-  of each query's cell; ``distance_join`` and ``radius_join`` probe the
-  same ring (``_ring_cells``).
+  of each query's cell; ``distance_join``, ``radius_join`` and the
+  streaming distance join probe the same ring: one side's rows shift
+  to every cell of ``cells.square_offsets(r)`` through
+  ``cells.neighbor_cells`` and meet the other side's home cell in one
+  (cell_x, cell_y) equi-join. ``st_pair_join`` keeps its own 3-D
+  half-space offset set, and ``knn_join`` its per-row, grid-clipped
+  radius.
 - ``nearest_hit``: O22 — argmin join via min_by (k=1 fast path).
 - ``linear_scan``: O29 — the un-pruned control (plain theta-join).
 
@@ -56,7 +60,7 @@ from pyspark.sql import functions as F
 
 from ..config import Box2
 from ..functions import geometry as G
-from ..functions.cells import grid_cell_sql
+from ..functions.cells import grid_cell_sql, neighbor_cells, square_offsets
 from .tiling import explode_covering_cells
 
 
@@ -157,36 +161,12 @@ def _seg_box(df: DataFrame, seg, p: str, pad: int = 0) -> tuple[DataFrame, tuple
     ), box
 
 
-def _ring_cells(df: DataFrame, cx: str, cy: str, r: int) -> DataFrame:
-    """df with one row per cell of the Chebyshev-<=r ring around its
-    home cell (SQL text ``cx``, ``cy``), as (cell_x, cell_y) — the probe
-    side of the distance-band and ring joins."""
-    keep = [f"`{c}`" for c in df.columns if c not in ("cell_x", "cell_y")]
-    return (
-        df.selectExpr(*keep, f"{cx} AS _qcx", f"{cy} AS _qcy")
-        .selectExpr("*", f"explode(sequence({-r}, {r})) AS _dx")
-        .selectExpr("*", f"explode(sequence({-r}, {r})) AS _dy")
-        .selectExpr(*keep, "_qcx + _dx AS cell_x", "_qcy + _dy AS cell_y")
-    )
-
-
-def pip_join(
-    points: DataFrame,
-    boxes: DataFrame,
-    dims: int = 3,
-    closed: bool = True,
-    broadcast_boxes: bool = True,
-) -> DataFrame:
-    """Point-in-box join (O11). `closed=True` = 3D BoundaryBox convention
-    (closed both ends, BoundaryBox.hpp:42-46); False = 2D rect
-    convention (min-closed/max-strict, .Test/QuadTree.cpp:36-42)."""
+def pip_join(points: DataFrame, boxes: DataFrame, dims: int = 3) -> DataFrame:
+    """Point-in-box join (O11) under the 3D BoundaryBox convention,
+    closed at both ends (BoundaryBox.hpp:42-46); the boxes broadcast."""
     box = G.BoxCols.prefixed("", dims=dims)
-    if closed:
-        pred = G.contains_point(box, F.col("x"), F.col("y"), F.col("z") if dims == 3 else None)
-    else:
-        pred = G.rect_contains_point(box, F.col("x"), F.col("y"))
-    rhs = F.broadcast(boxes) if broadcast_boxes else boxes
-    return points.join(rhs, pred)
+    pred = G.contains_point(box, F.col("x"), F.col("y"), F.col("z") if dims == 3 else None)
+    return points.join(F.broadcast(boxes), pred)
 
 
 def range_join(
@@ -351,11 +331,11 @@ def distance_join(
         F.col("x").cast("long").alias("ax"),
         F.col("y").cast("long").alias("ay"),
     ).withColumn("cell_x", F.expr(acx)).withColumn("cell_y", F.expr(acy))
-    b = _ring_cells(points.select(
+    b = neighbor_cells(points.select(
         F.col(id_col).alias("id_b"),
         F.col("x").cast("long").alias("bx"),
         F.col("y").cast("long").alias("by"),
-    ), *_cell_sql(world, depth, "bx", "by"), r)
+    ), *_cell_sql(world, depth, "bx", "by"), square_offsets(r))
     dist2 = (
         (F.col("ax") - F.col("bx")) * (F.col("ax") - F.col("bx"))
         + (F.col("ay") - F.col("by")) * (F.col("ay") - F.col("by"))
@@ -513,11 +493,11 @@ def radius_join(
         .withColumn("cell_x", F.expr(pcx))
         .withColumn("cell_y", F.expr(pcy))
     )
-    q = _ring_cells(
+    q = neighbor_cells(
         queries
         .withColumn("qx", F.col("qx").cast("long"))
         .withColumn("qy", F.col("qy").cast("long")),
-        *_cell_sql(world, depth, "qx", "qy"), r)
+        *_cell_sql(world, depth, "qx", "qy"), square_offsets(r))
     rhs = F.broadcast(q) if method == "broadcast" else q
     dist2 = (
         (F.col("qx") - F.col("x")) * (F.col("qx") - F.col("x"))
@@ -723,7 +703,8 @@ def ring_semi_join(
     """O17: all objects whose cell lies in the Chebyshev-<=k ring around
     each query point's cell (the 3x3 load ring). Objects must carry
     (cell_x, cell_y); queries carry point (x, y)."""
-    q = _ring_cells(queries, *_cell_sql(world, depth, "x", "y"), k)
+    q = neighbor_cells(queries, *_cell_sql(world, depth, "x", "y"),
+                       square_offsets(k))
     return q.join(objects, ["cell_x", "cell_y"])
 
 

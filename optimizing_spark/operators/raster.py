@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.cells import ROOK4, neighbor_cells, square_offsets
+
 
 def _axis_t(o: Column, d: Column, lo: Column, hi: Column) -> tuple[Column, Column]:
     t0 = (lo - o) / d
@@ -144,19 +146,10 @@ def focal_sum(
     Integer values stay exact at any accumulation order; report
     (sum, count) rather than the mean so exactness survives engines
     that round division differently."""
-    offs = [(dx, dy)
-            for dx in range(-radius, radius + 1)
-            for dy in range(-radius, radius + 1)]
-    contrib = F.explode(F.array(*[
-        F.struct((F.col(x) + dx).alias("_tx"), (F.col(y) + dy).alias("_ty"))
-        for dx, dy in offs
-    ])).alias("_t")
-    spread = raster.select(F.col(value).alias("_v"), contrib).select(
-        F.col("_t._tx").alias(x), F.col("_t._ty").alias(y), "_v")
-    agg = spread.groupBy(x, y).agg(
-        F.sum("_v").alias("focal_sum"),
-        F.count("*").alias("focal_n"),
-    )
+    spread = neighbor_cells(raster, f"`{x}`", f"`{y}`",
+                            square_offsets(radius), out=(x, y))
+    agg = spread.groupBy(x, y).agg(F.expr(f"sum(`{value}`) AS focal_sum"),
+                                   F.expr("count(*) AS focal_n"))
     # report occupied cells only (the sparse-raster contract)
     return raster.join(agg, [x, y])
 
@@ -190,32 +183,16 @@ def contour_edges(
     inside = raster.filter(F.col(value) >= F.lit(int(threshold))).select(
         F.col(x).cast("long").alias("cx"),
         F.col(y).cast("long").alias("cy"))
-    dirs = F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"),
-                 F.lit(side).alias("side"))
-        for dx, dy, side in
-        ((1, 0, "E"), (-1, 0, "W"), (0, 1, "N"), (0, -1, "S"))
-    ])
-    probes = inside.select(
-        "cx", "cy", F.explode(dirs).alias("_d"),
-    ).select(
-        "cx", "cy", F.col("_d.side").alias("side"),
-        (F.col("cx") + F.col("_d.dx")).alias("nx"),
-        (F.col("cy") + F.col("_d.dy")).alias("ny"),
-    )
+    probes = neighbor_cells(inside, "cx", "cy", ROOK4, out=("nx", "ny"))
     nbr = inside.select(F.col("cx").alias("nx"), F.col("cy").alias("ny"))
-    boundary = probes.join(nbr, ["nx", "ny"], "left_anti")
-    s = F.col("side")
-    return boundary.select(
-        "cx", "cy", "side",
-        F.when(s == "E", F.col("cx") + 1).otherwise(F.col("cx"))
-        .alias("x1"),
-        F.when(s == "N", F.col("cy") + 1).otherwise(F.col("cy"))
-        .alias("y1"),
-        F.when(s == "W", F.col("cx")).otherwise(F.col("cx") + 1)
-        .alias("x2"),
-        F.when(s == "S", F.col("cy")).otherwise(F.col("cy") + 1)
-        .alias("y2"),
+    # the edge is the side shared with the probed neighbour (nx, ny)
+    return probes.join(nbr, ["nx", "ny"], "left_anti").selectExpr(
+        "cx", "cy",
+        "CASE WHEN nx > cx THEN 'E' WHEN nx < cx THEN 'W' "
+        "WHEN ny > cy THEN 'N' ELSE 'S' END AS side",
+        "greatest(cx, nx) AS x1", "greatest(cy, ny) AS y1",
+        "CASE WHEN nx < cx THEN cx ELSE cx + 1 END AS x2",
+        "CASE WHEN ny < cy THEN cy ELSE cy + 1 END AS y2",
     )
 
 
@@ -296,10 +273,6 @@ def distance_transform(
         .withColumn("dist", F.lit(0).cast("long"))
         .localCheckpoint()
     )
-    dirs = F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-        for dx, dy in ((1, 0), (-1, 0), (0, 1), (0, -1))
-    ])
     # BFS invariant: a neighbor of a dist-(r-1) cell has dist >= r-2,
     # so the dedup anti-join needs only the LAST TWO frontiers — the
     # growing settled set is never re-shuffled or re-checkpointed;
@@ -307,12 +280,8 @@ def distance_transform(
     frontiers = [cur]
     prev = cur.select("px", "py").filter(F.lit(False))
     for r in range(1, max_rounds + 1):
-        probes = cur.select(
-            "px", "py", F.explode(dirs).alias("_d"),
-        ).select(
-            (F.col("px") + F.col("_d.dx")).alias("px"),
-            (F.col("py") + F.col("_d.dy")).alias("py"),
-        ).distinct()
+        probes = neighbor_cells(cur.select("px", "py"), "px", "py", ROOK4,
+                                out=("px", "py")).distinct()
         recent = cur.select("px", "py").unionByName(prev)
         new = (
             probes.join(occ, ["px", "py"])
@@ -407,18 +376,12 @@ def kde_grid(
     # point sits anywhere in its own cell, so cover ceil((radius+half)
     # /edge) rings (center offset from own-cell center <= radius+half)
     k = -(-(radius + half) // edge)
-    px_cell = F.shiftright(F.col(x).cast("long"), world_bits - depth)
-    py_cell = F.shiftright(F.col(y).cast("long"), world_bits - depth)
-    offs = F.explode(F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-        for dx in range(-k, k + 1) for dy in range(-k, k + 1)])).alias("_o")
-    cand = points.select(
-        F.col(x).cast("long").alias("_px"), F.col(y).cast("long").alias("_py"),
-        px_cell.alias("_cx0"), py_cell.alias("_cy0"), offs)
-    cand = cand.select(
-        "_px", "_py",
-        (F.col("_cx0") + F.col("_o.dx")).alias("cx"),
-        (F.col("_cy0") + F.col("_o.dy")).alias("cy"))
+    sh = world_bits - depth
+    cand = neighbor_cells(
+        points.selectExpr(f"CAST(`{x}` AS BIGINT) AS _px",
+                          f"CAST(`{y}` AS BIGINT) AS _py"),
+        f"shiftright(_px, {sh})", f"shiftright(_py, {sh})",
+        square_offsets(k), out=("cx", "cy"))
     ccx = F.col("cx") * edge + half
     ccy = F.col("cy") * edge + half
     d2 = (F.col("_px") - ccx) * (F.col("_px") - ccx) \

@@ -7,15 +7,16 @@ insert -> per-frame ring load + viewport search, SURVEY.md §3)
 re-expressed over the input_hint document table:
 
     docs(doc_id, spans) --geocode--> +(ix, iy, sx, sy)
-        --assign_quadtree_pow2--> +(qt_depth, qt_code)
-        --repartition(qt prefix)--> cell-clustered table
+        --assign_quadtree_pow2--> +(qt_depth, qt_code, cell_prefix)
+        --layout.write_clustered--> cell-clustered table
         --joins / aggregates--> results
 
-All stages are narrow projections except the final repartition (one
-shuffle) and whatever join the caller runs. Skew handling: cells whose
-row count exceeds max_rows_per_cell are re-encoded one level deeper
-(adaptive refinement, the reference's capacity rule at cluster scale) —
-and the residual hot cells get a salt column for downstream joins.
+All stages are narrow projections except the clustered write's
+repartition on cell_prefix (one shuffle) and whatever join the caller
+runs. Skew handling: cells whose row count exceeds max_rows_per_cell
+are re-encoded one level deeper (adaptive refinement, the reference's
+capacity rule at cluster scale) — and the residual hot cells get a
+salt column for downstream joins.
 """
 
 from __future__ import annotations
@@ -28,26 +29,18 @@ from ..functions import cells as C
 from ..functions.geocode import geocode
 
 
-def tile_documents(
-    docs: DataFrame,
-    how: str = "jvm",
-    max_node_depth: int = 4,
-    coarse_prefix_depth: int = 2,
-    repartition_to: int | None = None,
-) -> DataFrame:
-    """docs(doc_id, spans) -> + geocode + quadtree cell columns,
-    clustered by coarse cell prefix (the WorldPartition two-level
-    design: hash-partition by coarse cell, order by Morton within)."""
+def tile_documents(docs: DataFrame, how: str = "jvm", max_node_depth: int = 4) -> DataFrame:
+    """docs(doc_id, spans) -> + geocode + quadtree cell columns + the
+    depth-<=2 ``cell_prefix`` a clustered write partitions by (the
+    WorldPartition two-level design: coarse cell, then Morton order
+    within)."""
     g = geocode(docs, how=how)
     t = C.assign_quadtree_pow2(g, max_node_depth=max_node_depth)
-    t = t.withColumn(
+    return t.withColumn(
         "cell_prefix",
         C.prefix_at_depth(F.col("qt_code"), F.col("qt_depth"),
-                          F.least(F.col("qt_depth"), F.lit(coarse_prefix_depth))),
+                          F.least(F.col("qt_depth"), F.lit(2))),
     )
-    if repartition_to:
-        t = t.repartition(repartition_to, "cell_prefix")
-    return t
 
 
 def refine_hot_cells(

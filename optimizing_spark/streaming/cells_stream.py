@@ -180,7 +180,7 @@ def streaming_distance_join(
     Output prefixes left/right columns ``l_``/``r_`` and carries the
     exact integer ``dist2``.
     """
-    from ..operators.joins import _cell_sql, _ring_cells, _ring_grid
+    from ..operators.joins import _cell_sql, _ring_grid
 
     depth, _, _, _, r = _ring_grid(world, d, depth,
                                    who="streaming_distance_join")
@@ -191,7 +191,8 @@ def streaming_distance_join(
         .withColumn("cell_y", F.expr(cy))
         .alias("l")
     )
-    rc = _ring_cells(right.withWatermark(ts_col, watermark), cx, cy, r).alias("r")
+    rc = C.neighbor_cells(right.withWatermark(ts_col, watermark), cx, cy,
+                          C.square_offsets(r)).alias("r")
     b = f"INTERVAL {int(bound_seconds)} SECONDS"
     # long cast: squaring 32-bit coordinate deltas overflows under
     # ANSI mode — same guard as the batch distance_join
@@ -228,7 +229,7 @@ def streaming_hex_ring_join(
     batch hex kring join (O17's load ring is inherently incremental:
     each arriving point matches the ring of cells around it). The
     right stream explodes to its own cell plus the 6 hex neighbors
-    (hex_neighbor_offsets), candidates meet in a (hq, hr) equi-join,
+    (cells.HEX_RING), candidates meet in a (hq, hr) equi-join,
     watermark + time bound evict state. Output carries l_/r_ prefixed
     columns plus the shared (hq, hr) ring cell."""
     hq_l, hr_l = C.hex_cell(F.col("x"), F.col("y"))
@@ -238,19 +239,11 @@ def streaming_hex_ring_join(
         .alias("l")
     )
     hq_r, hr_r = C.hex_cell(F.col("x"), F.col("y"))
-    offs = F.array_union(
-        F.array(F.struct(F.lit(0).alias("dq"), F.lit(0).alias("dr"))),
-        C.hex_neighbor_offsets(),
-    )
-    rc = (
+    rc = C.neighbor_cells(
         right.withWatermark(ts_col, watermark)
-        .withColumn("_hq", hq_r).withColumn("_hr", hr_r)
-        .withColumn("_o", F.explode(offs))
-        .withColumn("hq", F.col("_hq") + F.col("_o.dq"))
-        .withColumn("hr", F.col("_hr") + F.col("_o.dr"))
-        .drop("_hq", "_hr", "_o")
-        .alias("r")
-    )
+        .withColumns({"hq": hq_r, "hr": hr_r}),
+        "hq", "hr", C.HEX_RING, out=("hq", "hr"),
+    ).alias("r")
     b = f"INTERVAL {int(bound_seconds)} SECONDS"
     cond = (
         (F.col("l.hq") == F.col("r.hq"))

@@ -7,10 +7,11 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from optimizing_spark.operators.autocorr import (
-    NEIGHBOR_OFFSETS,
-    spatial_autocorr,
-)
+from optimizing_spark.operators.autocorr import spatial_autocorr
+
+# binary queen weights, spelled out independently of the package
+STAR = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
+QUEEN = [o for o in STAR if o != (0, 0)]
 
 
 def _textbook(cells):
@@ -23,7 +24,7 @@ def _textbook(cells):
     den = ((xs - mean) ** 2).sum()
     w = num_i = num_c = 0.0
     for (cx, cy), xi in vals.items():
-        for dx, dy in NEIGHBOR_OFFSETS:
+        for dx, dy in QUEEN:
             xj = vals.get((cx + dx, cy + dy))
             if xj is None:
                 continue
@@ -102,8 +103,6 @@ def test_degenerate_null_no_neighbors(spark):
 def _textbook_gstar(cells):
     """Float Gi* straight from Ord & Getis 1995 (binary queen weights
     including self, occupied cells only)."""
-    from optimizing_spark.operators.autocorr import STAR_OFFSETS
-
     vals = {(cx, cy): x for cx, cy, x in cells}
     xs = np.array([x for _, _, x in cells], dtype=np.float64)
     n = len(xs)
@@ -111,7 +110,7 @@ def _textbook_gstar(cells):
     s = np.sqrt((xs ** 2).mean() - mean ** 2)
     out = {}
     for (cx, cy), _ in vals.items():
-        nbr = [vals[(cx + dx, cy + dy)] for dx, dy in STAR_OFFSETS
+        nbr = [vals[(cx + dx, cy + dy)] for dx, dy in STAR
                if (cx + dx, cy + dy) in vals]
         w = len(nbr)
         den = s * np.sqrt((n * w - w * w) / (n - 1))

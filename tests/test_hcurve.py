@@ -1,4 +1,4 @@
-"""Hilbert-range bbox pruning (plans/hcurve): full-enumeration superset
+"""Hilbert-range bbox pruning (plans/curve_scan): full-enumeration superset
 certification on a small world, scalar==column code parity, Spark
 end-to-end exactness + directory pruning + pushed filters, and the
 range-count advantage over the Morton decomposition that motivates it."""
@@ -7,7 +7,7 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from optimizing_spark.functions import cells as C
-from optimizing_spark.plans import hcurve, layout, zorder
+from optimizing_spark.plans import curve_scan, layout
 
 WB = 16
 BOX = (9000, 22000, 14095, 30123)  # ~0.24% of the 65536^2 world
@@ -30,12 +30,12 @@ def test_ranges_cover_exactly_small_world():
     residual filter never rejects a covered row."""
     bits = 6
     n = 1 << bits
-    codes = {(x, y): hcurve.hilbert_index(x, y, bits)
+    codes = {(x, y): curve_scan.hilbert_index(x, y, bits)
              for x in range(n) for y in range(n)}
     for _ in range(25):
         x0, x1 = sorted(RNG.integers(0, n, 2).tolist())
         y0, y1 = sorted(RNG.integers(0, n, 2).tolist())
-        ranges = hcurve.hilbert_ranges(
+        ranges = curve_scan.hilbert_ranges(
             x0, y0, x1, y1, world_bits=bits, split_depth=bits)
         for (x, y), c in codes.items():
             inside = x0 <= x <= x1 and y0 <= y <= y1
@@ -53,16 +53,16 @@ def test_split_depth_superset():
     for _ in range(10):
         x0, x1 = sorted(RNG.integers(0, n, 2).tolist())
         y0, y1 = sorted(RNG.integers(0, n, 2).tolist())
-        coarse = hcurve.hilbert_ranges(
+        coarse = curve_scan.hilbert_ranges(
             x0, y0, x1, y1, world_bits=bits, split_depth=3)
         for x in range(x0, x1 + 1):
             for y in range(y0, y1 + 1):
-                c = hcurve.hilbert_index(x, y, bits)
+                c = curve_scan.hilbert_index(x, y, bits)
                 assert any(lo <= c <= hi for lo, hi in coarse)
 
 
 def test_scalar_matches_column(spark):
-    """hcurve.hilbert_index (plan-time endpoints) agrees bit-for-bit
+    """curve_scan.hilbert_index (plan-time endpoints) agrees bit-for-bit
     with cells.with_hilbert2d (the data column the ranges prune)."""
     pts = [(int(x), int(y)) for x, y in
            zip(RNG.integers(0, 1 << WB, 300), RNG.integers(0, 1 << WB, 300))]
@@ -72,19 +72,19 @@ def test_scalar_matches_column(spark):
         "obj_id long, ix long, iy long")
     rows = C.with_hilbert2d(df, bits=WB).collect()
     for r in rows:
-        assert r.h == hcurve.hilbert_index(r.ix, r.iy, WB)
+        assert r.h == curve_scan.hilbert_index(r.ix, r.iy, WB)
 
 
 def test_box_scan_exact_and_pruned(spark, tmp_path):
     path = str(tmp_path / "ht")
     pd_depth = 2  # 16 directories
     sh = 2 * (WB - pd_depth)
-    t = hcurve.with_hilbert_key(_objects(spark)).withColumn(
+    t = curve_scan.with_hilbert_key(_objects(spark)).withColumn(
         "cell_prefix", F.shiftright(F.col("h"), sh))
     layout.write_clustered(t, path, order_col="h")
 
     x0, y0, x1, y1 = BOX
-    got = hcurve.read_hilbert_box(
+    got = curve_scan.read_hilbert_box(
         spark, path, x0, y0, x1, y1,
         world_bits=WB, prefix_col="cell_prefix", prefix_depth=pd_depth)
     full = spark.read.parquet(path)
@@ -114,6 +114,6 @@ def test_fewer_ranges_than_morton():
     for _ in range(40):
         x0, x1 = sorted(RNG.integers(0, 1 << WB, 2).tolist())
         y0, y1 = sorted(RNG.integers(0, 1 << WB, 2).tolist())
-        tot_h += len(hcurve.hilbert_ranges(x0, y0, x1, y1, world_bits=WB))
-        tot_m += len(zorder.morton_ranges(x0, y0, x1, y1, world_bits=WB))
+        tot_h += len(curve_scan.hilbert_ranges(x0, y0, x1, y1, world_bits=WB))
+        tot_m += len(curve_scan.morton_ranges(x0, y0, x1, y1, world_bits=WB))
     assert tot_h < tot_m, (tot_h, tot_m)

@@ -102,7 +102,7 @@ def test_range_join_plan_build_gateway_budget(spark, monkeypatch):
 def test_pip_join_matches_oracle(spark):
     pts = datagen.spark_table(spark, "spatial_objects", 3000, partitions=4)
     boxes = spark.createDataFrame(datagen.query_boxes_pandas(30))
-    got = joins.pip_join(pts, boxes, dims=3, closed=True) \
+    got = joins.pip_join(pts, boxes, dims=3) \
         .select("query_id", "obj_id").toPandas()
     got_pairs = set(zip(got.query_id, got.obj_id))
 

@@ -8,7 +8,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from optimizing_spark.functions import cells as C
-from optimizing_spark.plans import layout, zorder
+from optimizing_spark.plans import curve_scan, layout
 
 WB = 16
 BOX = (9000, 22000, 14095, 30123)  # ~0.24% of the 65536^2 world
@@ -26,12 +26,12 @@ def test_box_scan_exact_and_pruned(spark, tmp_path):
     path = str(tmp_path / "zt")
     pd_depth = 2  # 16 directories
     sh = 2 * (WB - pd_depth)
-    t = zorder.with_morton_key(_objects(spark)).withColumn(
+    t = curve_scan.with_morton_key(_objects(spark)).withColumn(
         "cell_prefix", F.shiftright(F.col("m"), sh))
     layout.write_clustered(t, path, order_col="m")
 
     x0, y0, x1, y1 = BOX
-    got = zorder.read_morton_box(
+    got = curve_scan.read_morton_box(
         spark, path, x0, y0, x1, y1,
         world_bits=WB, prefix_col="cell_prefix", prefix_depth=pd_depth)
     full = spark.read.parquet(path)
@@ -59,14 +59,14 @@ def test_row_group_stats_skip(spark, tmp_path):
     writer sorted by m)."""
     path = str(tmp_path / "zt2")
     spark.conf.set("spark.sql.files.maxRecordsPerFile", "0")
-    t = zorder.with_morton_key(_objects(spark, 60000))
+    t = curve_scan.with_morton_key(_objects(spark, 60000))
     (t.repartition(1).sortWithinPartitions("m")
       .write.mode("overwrite")
       .option("parquet.block.size", 64 * 1024)  # many small row groups
       .parquet(path))
 
     x0, y0, x1, y1 = BOX
-    ranges = zorder.morton_ranges(x0, y0, x1, y1, world_bits=WB)
+    ranges = curve_scan.morton_ranges(x0, y0, x1, y1, world_bits=WB)
     n_groups = n_hit = 0
     for f in glob.glob(f"{path}/*.parquet"):
         meta = pq.ParquetFile(f).metadata
@@ -80,7 +80,7 @@ def test_row_group_stats_skip(spark, tmp_path):
     assert n_hit < n_groups / 2, (n_hit, n_groups)
 
     # and the engine-side read over those files is still exact
-    got = zorder.read_morton_box(spark, path, x0, y0, x1, y1, world_bits=WB)
+    got = curve_scan.read_morton_box(spark, path, x0, y0, x1, y1, world_bits=WB)
     want = (
         t.filter((F.col("ix") >= x0) & (F.col("ix") <= x1)
                  & (F.col("iy") >= y0) & (F.col("iy") <= y1)).count())
@@ -91,12 +91,12 @@ def test_ranges_cover_spark_morton(spark):
     """Superset contract against the JVM morton2d itself: every row in
     the box has its m inside some range; rows far outside don't."""
     x0, y0, x1, y1 = BOX
-    ranges = zorder.morton_ranges(x0, y0, x1, y1, world_bits=WB)
+    ranges = curve_scan.morton_ranges(x0, y0, x1, y1, world_bits=WB)
     cov = None
     for lo, hi in ranges:
         r = F.col("m").between(lo, hi)
         cov = r if cov is None else (cov | r)
-    t = zorder.with_morton_key(_objects(spark, 20000))
+    t = curve_scan.with_morton_key(_objects(spark, 20000))
     in_box = ((F.col("ix") >= x0) & (F.col("ix") <= x1)
               & (F.col("iy") >= y0) & (F.col("iy") <= y1))
     assert t.filter(in_box & ~cov).count() == 0
