@@ -57,6 +57,7 @@ from __future__ import annotations
 import os
 import sys
 from collections.abc import Callable
+from functools import reduce
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -1201,6 +1202,44 @@ _SQL_REBUILD = f"""
 """
 
 
+def _cols(prefix: str, axes: str = "xy") -> tuple:
+    """The axis columns ``prefix + axis`` (ox, oy; cx, cy, cz; ...)."""
+    return tuple(F.col(prefix + a) for a in axes)
+
+
+def _named(cols, names: str) -> list:
+    return [c.alias(n) for c, n in zip(cols, names.split())]
+
+
+def _nation_rays(spark: SparkSession, sf_dir: str, m: int) -> DataFrame:
+    """One 2-D ray origin per nation, (query_id, ox, oy) in [0, m)^2:
+    D.knn_queries' origins for m = E, as doubles."""
+    k = F.col("n_nationkey").cast("long")
+    return D.load(spark, sf_dir, "nation").select(
+        k.alias("query_id"),
+        ((k * 104729 + 12345) % m).cast("double").alias("ox"),
+        ((k * 48271 + 54321) % m).cast("double").alias("oy"),
+    )
+
+
+def _sphere_hits(probe: DataFrame, other: DataFrame, axes: str = "xy") -> DataFrame:
+    """Nearest hit per query_id of the rays (o<axis>, d<axis>) on one
+    side against the spheres (obj_id, c<axis>, radius) on the other,
+    which is broadcast (raster.nearest_hit)."""
+    t = R.ray_sphere_t(_cols("o", axes), _cols("d", axes), _cols("c", axes),
+                       F.col("radius"))
+    return R.nearest_hit(probe, other, t, "query_id")
+
+
+def _u01(stream: str):
+    """Uniform in [0, 1) per (stream, query_id) from an md5 prefix: the
+    bridge DuckDB's twins reproduce bit for bit."""
+    h = F.expr(
+        f"cast(conv(substr(md5(concat('{stream}:', "
+        f"cast(query_id as string))), 1, 15), 16, 10) as bigint)")
+    return (h % 1048576).cast("double") / 1048576.0
+
+
 def q_ray_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O20+O22: slab-method ray/AABB nearest hit (Raytracing.hpp:267-289,
     640-669), oracle-exact: one 2D diagonal d=(1,1) ray per nation so
@@ -1208,33 +1247,13 @@ def q_ray_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmin/tmax folds and the nearest-(t, obj_id) argmin are then
     bit-exact in DuckDB integer arithmetic. 2D keeps the expected hit
     count per ray ~100 (a 3D diagonal in a 65536^3 world misses every
-    small box)."""
-    from optimizing_spark.operators import raster as R
-
-    o = _objects_boxes(spark, sf_dir)
-    boxes = o.select(
-        "obj_id",
-        F.col("min_x").cast("double").alias("min_x"),
-        F.col("min_y").cast("double").alias("min_y"),
-        F.col("max_x").cast("double").alias("max_x"),
-        F.col("max_y").cast("double").alias("max_y"),
-    )
-    k = F.col("n_nationkey").cast("long")
-    rays = D.load(spark, sf_dir, "nation").select(
-        k.alias("query_id"),
-        ((k * 104729 + 12345) % E).cast("double").alias("ox"),
-        ((k * 48271 + 54321) % E).cast("double").alias("oy"),
-    )
-    t = R.ray_aabb_t(
-        (F.col("ox"), F.col("oy")),
-        (F.lit(1.0), F.lit(1.0)),
-        (F.col("min_x"), F.col("min_y")),
-        (F.col("max_x"), F.col("max_y")),
-    )
-    j = boxes.crossJoin(F.broadcast(rays)).withColumn("t", t) \
-        .filter(F.col("t").isNotNull())
-    w = Window.partitionBy("query_id").orderBy("t", "obj_id")
-    return j.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= 1) \
+    small box). The boxes stream against the broadcast rays."""
+    boxes = _objects_boxes(spark, sf_dir).select(
+        "obj_id", *(F.col(c).cast("double").alias(c)
+                    for c in ("min_x", "min_y", "max_x", "max_y")))
+    t = R.ray_aabb_t(_cols("o"), (F.lit(1.0), F.lit(1.0)),
+                     _cols("min_"), _cols("max_"))
+    return R.nearest_hit(boxes, _nation_rays(spark, sf_dir, E), t, "query_id") \
         .select("query_id", "obj_id", F.col("t").cast("long").alias("t"))
 
 
@@ -1268,32 +1287,17 @@ def q_ray_circle(spark: SparkSession, sf_dir: str) -> DataFrame:
     (mul, sub, fold-add, sqrt) is an IEEE-754 correctly-rounded double
     op evaluated in the same order in both engines, so b, disc, sqrt
     and the root are bit-identical; t is rounded to 6 only for the
-    output column."""
-    from optimizing_spark.operators import raster as R
-
-    o = D.objects2d(spark, sf_dir)
-    circles = o.select(
+    output column. The circles stream against the broadcast rays."""
+    circles = D.objects2d(spark, sf_dir).select(
         "obj_id",
         F.col("ix").cast("double").alias("cx"),
         F.col("iy").cast("double").alias("cy"),
         (F.col("sx") + 13).cast("double").alias("radius"),
     )
-    k = F.col("n_nationkey").cast("long")
-    rays = D.load(spark, sf_dir, "nation").select(
-        k.alias("query_id"),
-        ((k * 104729 + 12345) % E).cast("double").alias("ox"),
-        ((k * 48271 + 54321) % E).cast("double").alias("oy"),
-    )
     d = F.lit(1.0) / F.sqrt(F.lit(2.0))
-    t = R.ray_sphere_t(
-        (F.col("ox"), F.col("oy")), (d, d),
-        (F.col("cx"), F.col("cy")), F.col("radius"),
-    )
-    j = circles.crossJoin(F.broadcast(rays)).withColumn("t", t) \
-        .filter(F.col("t").isNotNull())
-    w = Window.partitionBy("query_id").orderBy("t", "obj_id")
-    return j.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= 1) \
-        .select("query_id", "obj_id", F.round(F.col("t"), 6).alias("t"))
+    rays = _nation_rays(spark, sf_dir, E).withColumns({"dx": d, "dy": d})
+    return _sphere_hits(circles, rays).select(
+        "query_id", "obj_id", F.round(F.col("t"), 6).alias("t"))
 
 
 _SQL_RAY_CIRCLE = """
@@ -1328,18 +1332,55 @@ _SQL_RAY_CIRCLE = """
 """
 
 
-def _circles(spark, sf_dir):
-    """Emissive mirror circles derived from supplier (integer centers,
-    radii and cent-scaled emission)."""
+def _circles(spark: SparkSession, sf_dir: str, m: int, r0: int) -> DataFrame:
+    """Emissive mirror circles derived from supplier: integer centers
+    in [0, m)^2, radius r0 + k % 97 and emission k % 11."""
     s = D.load(spark, sf_dir, "supplier")
     k = F.col("s_suppkey").cast("long")
     return s.select(
         k.alias("obj_id"),
-        ((k * 48271) % E).cast("double").alias("cx"),
-        ((k * 69621) % E).cast("double").alias("cy"),
-        ((k % 97) + 20).cast("double").alias("radius"),
+        ((k * 48271) % m).cast("double").alias("cx"),
+        ((k * 69621) % m).cast("double").alias("cy"),
+        ((k % 97) + r0).cast("double").alias("radius"),
         ((k % 11)).cast("double").alias("emit"),
     )
+
+
+def _mirror_chain(spark: SparkSession, sf_dir: str, m: int, r0: int,
+                  depth: int) -> DataFrame:
+    """compute_radiance's SPECULAR branch (Raytracing.hpp:581-587)
+    recursing to ``depth``: the nation rays at 45 degrees in [0, m)^2
+    over _circles(m, r0). Each segment is a nearest hit and a mirror
+    bounce; a ray stops when it escapes or after ``depth`` hits.
+    Returns (query_id, n_hits, acc, obj1..obj<depth>): obj<i> is the
+    i-th hit (NULL past n_hits) and acc = sum of 0.5^(i-1) * emit_i.
+    Emissions are INTEGERS and the weights powers of two, so acc is
+    exact dyadic arithmetic in any order, and every geometric step is
+    correctly-rounded IEEE double in a fixed expression order, so
+    DuckDB reproduces all segments bit for bit. A ray missing at
+    segment 1 has no row (raycast false)."""
+    circles = _circles(spark, sf_dir, m, r0)
+    d = F.lit(1.0) / F.sqrt(F.lit(2.0))
+    state = _nation_rays(spark, sf_dir, m).withColumns(
+        {"dx": d, "dy": d, "acc": F.lit(0.0)})
+    o, dr = _cols("o"), _cols("d")
+    outs = []
+    for i in range(1, depth + 1):
+        h = _sphere_hits(state, circles).withColumns({
+            "acc": F.col("acc") + F.lit(0.5 ** (i - 1)) * F.col("emit"),
+            f"obj{i}": F.col("obj_id")})
+        objs = [f"obj{j}" for j in range(1, i + 1)]
+        if i > 1:
+            outs.append(state.join(h, "query_id", "left_anti").select(
+                "query_id", F.lit(i - 1).alias("n_hits"), "acc", *objs[:-1]))
+        if i == depth:
+            outs.append(h.select("query_id", F.lit(depth).alias("n_hits"), "acc", *objs))
+            break
+        p = R.hit_point(o, dr, F.col("t"))
+        rd = R.reflect(dr, R.sphere_normal(p, _cols("c"), F.col("radius")))
+        state = h.select("query_id", *_named(R.nudge(p, rd), "ox oy"),
+                         *_named(rd, "dx dy"), "acc", *objs)
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), outs)
 
 
 _SQL_CIRCLES = f"""
@@ -1355,69 +1396,13 @@ _SQL_CIRCLES = f"""
 def q_mirror_bounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O23 SPECULAR path segment, oracle-exact: two-bounce radiance
     over emissive mirror circles (compute_radiance's specular branch,
-    Raytracing.hpp:581-587, unrolled twice). Every step — quadratic
-    nearest hit, normal (p-c)/r, mirror reflect d-2(d.n)n, radiance
-    emit1 + 0.5*emit2 — is correctly-rounded IEEE double arithmetic in
-    a fixed evaluation order, so DuckDB reproduces it bit-for-bit. The
+    Raytracing.hpp:581-587, twice): the depth-2 run of _mirror_chain in
+    world E. radiance = 0.0 + 1.0*emit1 + 0.5*emit2 is bit-equal to the
+    twin's emit1 + 0.5*emit2, because the emissions are integers. The
     DIFFUSE/REFRACTION branches need trig + hash streams that are not
     SQL-portable; those are certified by the NumPy replay test."""
-    from optimizing_spark.operators import raster as R
-
-    circles = _circles(spark, sf_dir)
-    k = F.col("n_nationkey").cast("long")
-    rays = D.load(spark, sf_dir, "nation").select(
-        k.alias("query_id"),
-        ((k * 104729 + 12345) % E).cast("double").alias("ox"),
-        ((k * 48271 + 54321) % E).cast("double").alias("oy"),
-    )
-    d = F.lit(1.0) / F.sqrt(F.lit(2.0))
-
-    def nearest(rdf, dx_col, dy_col):
-        t = R.ray_sphere_t(
-            (F.col("ox"), F.col("oy")), (dx_col, dy_col),
-            (F.col("cx"), F.col("cy")), F.col("radius"),
-        )
-        j = rdf.crossJoin(F.broadcast(circles)).withColumn("t", t) \
-            .filter(F.col("t").isNotNull())
-        w = Window.partitionBy("query_id").orderBy("t", "obj_id")
-        return j.withColumn("_rk", F.row_number().over(w)) \
-            .filter(F.col("_rk") <= 1).drop("_rk")
-
-    h1 = nearest(rays.withColumn("dx", d).withColumn("dy", d),
-                 F.col("dx"), F.col("dy"))
-    # hit point, outward normal, mirror reflection
-    h1 = h1.withColumns({
-        "px": F.col("ox") + F.col("dx") * F.col("t"),
-        "py": F.col("oy") + F.col("dy") * F.col("t"),
-    })
-    h1 = h1.withColumns({
-        "nx": (F.col("px") - F.col("cx")) / F.col("radius"),
-        "ny": (F.col("py") - F.col("cy")) / F.col("radius"),
-    })
-    dot = F.col("dx") * F.col("nx") + F.col("dy") * F.col("ny")
-    h1 = h1.withColumn("_dot", dot).withColumns({
-        "rdx": F.col("dx") - 2.0 * F.col("_dot") * F.col("nx"),
-        "rdy": F.col("dy") - 2.0 * F.col("_dot") * F.col("ny"),
-    })
-    seg1 = h1.select(
-        "query_id", F.col("obj_id").alias("obj1"), F.col("emit").alias("emit1"),
-        (F.col("px") + F.col("rdx") * 1e-6).alias("ox"),
-        (F.col("py") + F.col("rdy") * 1e-6).alias("oy"),
-        F.col("rdx").alias("dx"), F.col("rdy").alias("dy"),
-    )
-    h2 = nearest(seg1, F.col("dx"), F.col("dy"))
-    hit2 = h2.select(
-        "query_id", "obj1", "emit1",
-        F.col("obj_id").alias("obj2"),
-        (F.col("emit1") + 0.5 * F.col("emit")).alias("radiance"),
-    )
-    # rays whose reflection escapes the scene keep only emit1
-    miss2 = seg1.join(h2.select("query_id"), "query_id", "left_anti").select(
-        "query_id", "obj1", "emit1",
-        F.lit(None).cast("long").alias("obj2"),
-        F.col("emit1").alias("radiance"),
-    )
-    return hit2.unionByName(miss2).select("query_id", "obj1", "obj2", "radiance")
+    return _mirror_chain(spark, sf_dir, E, 20, 2).select(
+        "query_id", "obj1", "obj2", F.col("acc").alias("radiance"))
 
 
 def _mirror_bounce_sql() -> str:
@@ -1490,21 +1475,6 @@ _MIRROR_REGION = 4096  # dense-corridor edge: ~20% circle coverage, so
 #                        depth cap is actually exercised at sf0.01
 
 
-def _circles_dense(spark, sf_dir):
-    """Mirror circles packed into a [0, _MIRROR_REGION)^2 corridor —
-    dense enough that reflected rays keep hitting (the depth-cap test
-    scene; the sparse world of _circles dies at segment 1)."""
-    s = D.load(spark, sf_dir, "supplier")
-    k = F.col("s_suppkey").cast("long")
-    return s.select(
-        k.alias("obj_id"),
-        ((k * 48271) % _MIRROR_REGION).cast("double").alias("cx"),
-        ((k * 69621) % _MIRROR_REGION).cast("double").alias("cy"),
-        ((k % 97) + 60).cast("double").alias("radius"),
-        ((k % 11)).cast("double").alias("emit"),
-    )
-
-
 _SQL_CIRCLES_DENSE = f"""
     SELECT CAST(s_suppkey AS BIGINT) AS obj_id,
            CAST((CAST(s_suppkey AS BIGINT) * 48271) % {_MIRROR_REGION} AS DOUBLE) AS cx,
@@ -1518,78 +1488,15 @@ _SQL_CIRCLES_DENSE = f"""
 def q_mirror_depth5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O23 SPECULAR chain at the reference's FULL depth cap 5
     (compute_radiance specular branch Raytracing.hpp:581-587 recursing
-    to the depth cap :692), unrolled: each segment is a nearest-hit
-    quadratic + mirror reflect; a ray dies when it escapes or after 5
-    hits. radiance = sum over hit segments of 0.5^(i-1) * emit_i —
-    emissions are INTEGERS and the weights are powers of two, so the
-    accumulation is exact dyadic arithmetic (no rounding, any order),
-    and every geometric step is correctly-rounded IEEE double in a
-    fixed expression order — DuckDB reproduces all five segments
-    bit-for-bit. Output: (query_id, n_hits, last_obj, radiance); rays
-    missing everything at segment 1 produce no row (raycast false)."""
-    from optimizing_spark.operators import raster as R
-
-    circles = _circles_dense(spark, sf_dir)
-    k = F.col("n_nationkey").cast("long")
-    d = F.lit(1.0) / F.sqrt(F.lit(2.0))
-    state = D.load(spark, sf_dir, "nation").select(
-        k.alias("query_id"),
-        ((k * 104729 + 12345) % _MIRROR_REGION).cast("double").alias("ox"),
-        ((k * 48271 + 54321) % _MIRROR_REGION).cast("double").alias("oy"),
-    ).withColumn("dx", d).withColumn("dy", d) \
-     .withColumn("acc", F.lit(0.0)) \
-     .withColumn("last_obj", F.lit(None).cast("long"))
-
-    def nearest(rdf):
-        t = R.ray_sphere_t(
-            (F.col("ox"), F.col("oy")), (F.col("dx"), F.col("dy")),
-            (F.col("cx"), F.col("cy")), F.col("radius"),
-        )
-        j = rdf.crossJoin(F.broadcast(circles)).withColumn("t", t) \
-            .filter(F.col("t").isNotNull())
-        w = Window.partitionBy("query_id").orderBy("t", "obj_id")
-        return j.withColumn("_rk", F.row_number().over(w)) \
-            .filter(F.col("_rk") <= 1).drop("_rk")
-
-    outs = []
-    for i in range(1, _MIRROR_DEPTH + 1):
-        h = nearest(state).withColumn(
-            "acc", F.col("acc") + F.lit(0.5 ** (i - 1)) * F.col("emit"))
-        if i > 1:
-            miss = state.join(h.select("query_id"), "query_id", "left_anti")
-            outs.append(miss.select(
-                "query_id", F.lit(i - 1).alias("n_hits"), "last_obj",
-                F.col("acc").alias("radiance")))
-        if i < _MIRROR_DEPTH:
-            h = h.withColumns({
-                "px": F.col("ox") + F.col("dx") * F.col("t"),
-                "py": F.col("oy") + F.col("dy") * F.col("t"),
-            })
-            h = h.withColumns({
-                "nx": (F.col("px") - F.col("cx")) / F.col("radius"),
-                "ny": (F.col("py") - F.col("cy")) / F.col("radius"),
-            })
-            dot = F.col("dx") * F.col("nx") + F.col("dy") * F.col("ny")
-            h = h.withColumn("_dot", dot).withColumns({
-                "rdx": F.col("dx") - 2.0 * F.col("_dot") * F.col("nx"),
-                "rdy": F.col("dy") - 2.0 * F.col("_dot") * F.col("ny"),
-            })
-            state = h.select(
-                "query_id",
-                (F.col("px") + F.col("rdx") * 1e-6).alias("ox"),
-                (F.col("py") + F.col("rdy") * 1e-6).alias("oy"),
-                F.col("rdx").alias("dx"), F.col("rdy").alias("dy"),
-                "acc", F.col("obj_id").alias("last_obj"),
-            )
-        else:
-            outs.append(h.select(
-                "query_id", F.lit(_MIRROR_DEPTH).alias("n_hits"),
-                F.col("obj_id").alias("last_obj"),
-                F.col("acc").alias("radiance")))
-    out = outs[0]
-    for p in outs[1:]:
-        out = out.unionByName(p)
-    return out
+    to the depth cap :692): _mirror_chain over circles packed into a
+    [0, _MIRROR_REGION)^2 corridor with radii 60 + k % 97 — dense
+    enough that reflected rays keep hitting (the sparse world of
+    q_mirror_bounce dies at segment 1). Output: (query_id, n_hits,
+    last_obj, radiance)."""
+    out = _mirror_chain(spark, sf_dir, _MIRROR_REGION, 60, _MIRROR_DEPTH)
+    last = F.coalesce(*(F.col(f"obj{j}") for j in range(_MIRROR_DEPTH, 0, -1)))
+    return out.select("query_id", "n_hits", last.alias("last_obj"),
+                      F.col("acc").alias("radiance"))
 
 
 def _mirror_depth5_sql(depth: int = _MIRROR_DEPTH) -> str:
@@ -1836,10 +1743,10 @@ def _spheres_refract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_refract_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O23 REFRACTION branch, driver-visible AND fully bit-exact
-    (Raytracing.hpp:588-635): glass ior 1.5, total internal reflection,
-    Schlick fresnel re, and the reflect-vs-refract choice by the
-    deterministic roulette u < 0.25 + 0.5*re with re/p and
-    (1-re)/(1-p) weights — unrolled three segments. Unlike the diffuse
+    (Raytracing.hpp:588-635): raster.glass — ior 1.5, total internal
+    reflection, Schlick fresnel re, and the reflect-vs-refract choice by
+    the deterministic roulette u < 0.25 + 0.5*re with re/p and
+    (1-re)/(1-p) weights — over three segments. Unlike the diffuse
     branch there is NO trig anywhere: every step is +,-,*,/,sqrt on
     md5-bridge uniforms and integer-derived geometry, all correctly
     rounded IEEE double, so DuckDB reproduces the radiance doubles
@@ -1849,19 +1756,10 @@ def q_refract_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     directions so total internal reflection genuinely fires. path
     letters: F refract, R roulette-reflect, T TIR, E emitter hit,
     M miss, C depth cap."""
-    from optimizing_spark.operators import raster as R
-
     spheres = _spheres_refract(spark, sf_dir)
     k = F.col("n_nationkey").cast("long")
-
-    def u01(stream: str):
-        h = F.expr(
-            f"cast(conv(substr(md5(concat('{stream}:', "
-            f"cast(query_id as string))), 1, 15), 16, 10) as bigint)")
-        return (h % 1048576).cast("double") / 1048576.0
-
     even = (F.col("query_id") % 2) == 0
-    w1, w2, w3 = u01("r1") - 0.5, u01("r2") - 0.5, u01("r3") - 0.5
+    w1, w2, w3 = _u01("r1") - 0.5, _u01("r2") - 0.5, _u01("r3") - 0.5
     wlen = F.sqrt(w1 * w1 + w2 * w2 + w3 * w3)
     state = D.load(spark, sf_dir, "nation").select(k.alias("query_id")).select(
         "query_id",
@@ -1875,111 +1773,32 @@ def q_refract_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(even, F.lit(-1.0)).otherwise(w3 / wlen).alias("dz"),
         F.lit(1.0).alias("tp"), F.lit("").alias("path"),
     )
+    o, d = _cols("o", "xyz"), _cols("d", "xyz")
 
-    def nearest(rdf: DataFrame) -> DataFrame:
-        t = R.ray_sphere_t(
-            (F.col("ox"), F.col("oy"), F.col("oz")),
-            (F.col("dx"), F.col("dy"), F.col("dz")),
-            (F.col("cx"), F.col("cy"), F.col("cz")), F.col("radius"))
-        j = rdf.crossJoin(F.broadcast(spheres)).withColumn("t", t) \
-            .filter(F.col("t").isNotNull())
-        w = Window.partitionBy("query_id").orderBy("t", "obj_id")
-        return j.withColumn("_rk", F.row_number().over(w)) \
-            .filter(F.col("_rk") <= 1).drop("_rk")
+    def ended(df: DataFrame, letter: str, hit_obj=-1, radiance=0.0) -> DataFrame:
+        return df.select("query_id", F.concat("path", F.lit(letter)).alias("path"),
+                         F.lit(hit_obj).cast("long").alias("hit_obj"),
+                         F.lit(radiance).alias("radiance"))
 
     outs = []
     for i in (1, 2, 3):
-        h = nearest(state)
-        outs.append(
-            state.join(h.select("query_id"), "query_id", "left_anti").select(
-                "query_id", F.concat("path", F.lit("M")).alias("path"),
-                F.lit(-1).cast("long").alias("hit_obj"),
-                F.lit(0.0).alias("radiance")))
-        outs.append(h.filter(F.col("obj_id") < 1000).select(
-            "query_id", F.concat("path", F.lit("E")).alias("path"),
-            F.col("obj_id").alias("hit_obj"),
-            (F.col("tp") * F.col("emit")).alias("radiance")))
+        h = _sphere_hits(state, spheres, "xyz")
+        outs.append(ended(state.join(h, "query_id", "left_anti"), "M"))
+        outs.append(ended(h.filter(F.col("obj_id") < 1000), "E", F.col("obj_id"),
+                          F.col("tp") * F.col("emit")))
         g = h.filter(F.col("obj_id") >= 1000)
         if i == 3:
-            outs.append(g.select(
-                "query_id", F.concat("path", F.lit("C")).alias("path"),
-                F.lit(-1).cast("long").alias("hit_obj"),
-                F.lit(0.0).alias("radiance")))
+            outs.append(ended(g, "C"))
             break
-        g = g.withColumns({
-            "px": F.col("ox") + F.col("dx") * F.col("t"),
-            "py": F.col("oy") + F.col("dy") * F.col("t"),
-            "pz": F.col("oz") + F.col("dz") * F.col("t"),
-        })
-        g = g.withColumns({
-            "nx": (F.col("px") - F.col("cx")) / F.col("radius"),
-            "ny": (F.col("py") - F.col("cy")) / F.col("radius"),
-            "nz": (F.col("pz") - F.col("cz")) / F.col("radius"),
-        })
-        g = g.withColumn(
-            "_dot", F.col("dx") * F.col("nx") + F.col("dy") * F.col("ny")
-            + F.col("dz") * F.col("nz"))
-        into = F.col("_dot") < 0
-        flip = F.when(into, F.lit(1.0)).otherwise(F.lit(-1.0))
-        g = g.withColumns({
-            "nlx": F.col("nx") * flip, "nly": F.col("ny") * flip,
-            "nlz": F.col("nz") * flip,
-        })
-        g = g.withColumn(
-            "_ddn", F.col("dx") * F.col("nlx") + F.col("dy") * F.col("nly")
-            + F.col("dz") * F.col("nlz"))
-        nnt = F.when(into, F.lit(_NNT_IN)).otherwise(F.lit(1.5))
-        g = g.withColumn("_nnt", nnt).withColumn(
-            "_cos2t",
-            1.0 - F.col("_nnt") * F.col("_nnt") * (1.0 - F.col("_ddn") * F.col("_ddn")))
-        tir = F.col("_cos2t") < 0
-        # mirror reflection (shared by TIR and the roulette-reflect arm)
-        g = g.withColumns({
-            "rdx": F.col("dx") - 2.0 * F.col("_dot") * F.col("nx"),
-            "rdy": F.col("dy") - 2.0 * F.col("_dot") * F.col("ny"),
-            "rdz": F.col("dz") - 2.0 * F.col("_dot") * F.col("nz"),
-        })
-        sgn = F.when(into, F.lit(1.0)).otherwise(F.lit(-1.0))
-        tcoef = sgn * (F.col("_ddn") * F.col("_nnt")
-                       + F.sqrt(F.greatest(F.lit(0.0), F.col("_cos2t"))))
-        g = g.withColumns({
-            "_tx": F.col("dx") * F.col("_nnt") - F.col("nx") * tcoef,
-            "_ty": F.col("dy") * F.col("_nnt") - F.col("ny") * tcoef,
-            "_tz": F.col("dz") * F.col("_nnt") - F.col("nz") * tcoef,
-        })
-        tlen = F.sqrt(F.col("_tx") * F.col("_tx") + F.col("_ty") * F.col("_ty")
-                      + F.col("_tz") * F.col("_tz"))
-        g = g.withColumns({
-            "tdx": F.col("_tx") / tlen, "tdy": F.col("_ty") / tlen,
-            "tdz": F.col("_tz") / tlen,
-        })
-        cdot = (F.col("tdx") * F.col("nx") + F.col("tdy") * F.col("ny")
-                + F.col("tdz") * F.col("nz"))
-        c1 = 1.0 - F.when(into, -F.col("_ddn")).otherwise(cdot)
-        re = F.lit(_R0_GLASS) + F.lit(1.0 - _R0_GLASS) * c1 * c1 * c1 * c1 * c1
-        g = g.withColumn("_re", re).withColumn(
-            "_p", 0.25 + 0.5 * F.col("_re")).withColumn("_u", u01(f"g{i}"))
-        take_refl = tir | (F.col("_u") < F.col("_p"))
-        wgt = F.when(tir, F.lit(1.0)) \
-            .when(F.col("_u") < F.col("_p"), F.col("_re") / F.col("_p")) \
-            .otherwise((1.0 - F.col("_re")) / (1.0 - F.col("_p")))
-        lbl = F.when(tir, F.lit("T")) \
-            .when(F.col("_u") < F.col("_p"), F.lit("R")).otherwise(F.lit("F"))
-        ndx = F.when(take_refl, F.col("rdx")).otherwise(F.col("tdx"))
-        ndy = F.when(take_refl, F.col("rdy")).otherwise(F.col("tdy"))
-        ndz = F.when(take_refl, F.col("rdz")).otherwise(F.col("tdz"))
+        p = R.hit_point(o, d, F.col("t"))
+        n = R.sphere_normal(p, _cols("c", "xyz"), F.col("radius"))
+        g, nd, wgt, tir, refl = R.glass(g, d, n, _u01(f"g{i}"))
+        lbl = F.when(tir, F.lit("T")).when(refl, F.lit("R")).otherwise(F.lit("F"))
         state = g.select(
-            "query_id",
-            (F.col("px") + ndx * 1e-6).alias("ox"),
-            (F.col("py") + ndy * 1e-6).alias("oy"),
-            (F.col("pz") + ndz * 1e-6).alias("oz"),
-            ndx.alias("dx"), ndy.alias("dy"), ndz.alias("dz"),
-            (F.col("tp") * wgt).alias("tp"),
+            "query_id", *_named(R.nudge(p, nd), "ox oy oz"),
+            *_named(nd, "dx dy dz"), (F.col("tp") * wgt).alias("tp"),
             F.concat("path", lbl).alias("path"))
-    out = outs[0]
-    for p in outs[1:]:
-        out = out.unionByName(p)
-    return out
+    return reduce(DataFrame.unionByName, outs)
 
 
 def _diffuse_bounce_sql() -> str:
@@ -2129,55 +1948,27 @@ def q_diffuse_bounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-6 on the sampled direction, while the OUTPUT radiance is
     EXACT: emitters carry integer emission and the floor albedo is
     0.5, so radiance = 0.5 * emit2 has no rounding at all and the
-    discrete second-hit identity is checked through obj2."""
-    from optimizing_spark.operators import raster as R
-
+    discrete second-hit identity is checked through obj2. The sampler
+    is not pathtrace's: that one picks its basis by |nl.x| > 0.9 and
+    does not normalise."""
     spheres = _spheres_diffuse(spark, sf_dir)
     k = F.col("n_nationkey").cast("long")
-    rays = (
-        D.load(spark, sf_dir, "nation").select(
-            k.alias("query_id"),
-            ((k * 104729 + 12345) % 101 - 50).cast("double").alias("ox"),
-            ((k * 48271 + 54321) % 101 - 50).cast("double").alias("oy"))
-        .withColumn("oz", F.lit(10.0))
-        .withColumn("dx", F.lit(0.0)).withColumn("dy", F.lit(0.0))
-        .withColumn("dz", F.lit(-1.0))
-    )
+    rays = D.load(spark, sf_dir, "nation").select(
+        k.alias("query_id"),
+        ((k * 104729 + 12345) % 101 - 50).cast("double").alias("ox"),
+        ((k * 48271 + 54321) % 101 - 50).cast("double").alias("oy"),
+        F.lit(10.0).alias("oz"), F.lit(0.0).alias("dx"), F.lit(0.0).alias("dy"),
+        F.lit(-1.0).alias("dz"))
 
-    def nearest(rdf: DataFrame) -> DataFrame:
-        t = R.ray_sphere_t(
-            (F.col("ox"), F.col("oy"), F.col("oz")),
-            (F.col("dx"), F.col("dy"), F.col("dz")),
-            (F.col("cx"), F.col("cy"), F.col("cz")), F.col("radius"))
-        j = rdf.crossJoin(F.broadcast(spheres)).withColumn("t", t) \
-            .filter(F.col("t").isNotNull())
-        w = Window.partitionBy("query_id").orderBy("t", "obj_id")
-        return j.withColumn("_rk", F.row_number().over(w)) \
-            .filter(F.col("_rk") <= 1).drop("_rk")
-
-    h1 = nearest(rays)
-    h1 = h1.withColumns({
-        "px": F.col("ox") + F.col("dx") * F.col("t"),
-        "py": F.col("oy") + F.col("dy") * F.col("t"),
-        "pz": F.col("oz") + F.col("dz") * F.col("t"),
-    })
     # downward exterior hit: oriented normal nl == outward normal
+    p = R.hit_point(_cols("o", "xyz"), _cols("d", "xyz"), F.col("t"))
+    nl = R.sphere_normal(p, _cols("c", "xyz"), F.col("radius"))
+    h1 = _sphere_hits(rays, spheres, "xyz").withColumns(
+        dict(zip(("px", "py", "pz", "nlx", "nly", "nlz"), p + nl)))
     h1 = h1.withColumns({
-        "nlx": (F.col("px") - F.col("cx")) / F.col("radius"),
-        "nly": (F.col("py") - F.col("cy")) / F.col("radius"),
-        "nlz": (F.col("pz") - F.col("cz")) / F.col("radius"),
-    })
-
-    def u01(stream: str):
-        h = F.expr(
-            f"cast(conv(substr(md5(concat('{stream}:', "
-            f"cast(query_id as string))), 1, 15), 16, 10) as bigint)")
-        return (h % 1048576).cast("double") / 1048576.0
-
-    h1 = h1.withColumns({
-        "_th": u01("d1") * 2.0 * 3.141592653589793,
-        "_r2s": F.sqrt(u01("d2")),
-        "_sq": F.sqrt(1.0 - u01("d2")),
+        "_th": _u01("d1") * 2.0 * 3.141592653589793,
+        "_r2s": F.sqrt(_u01("d2")),
+        "_sq": F.sqrt(1.0 - _u01("d2")),
     })
     # a = (0,1,0) if |w.x| > 0.1 else (1,0,0)  (smallpt u-basis pick)
     ax = F.when(F.abs(F.col("nlx")) > 0.1, F.lit(0.0)).otherwise(F.lit(1.0))
@@ -2204,14 +1995,11 @@ def q_diffuse_bounce(spark: SparkSession, sf_dir: str) -> DataFrame:
            .withColumn("dfy", F.col("_ry") / dlen) \
            .withColumn("dfz", F.col("_rz") / dlen)
 
-    r2 = h1.select(
-        "query_id", "dfx", "dfy", "dfz",
-        (F.col("px") + F.col("dfx") * 1e-6).alias("ox"),
-        (F.col("py") + F.col("dfy") * 1e-6).alias("oy"),
-        (F.col("pz") + F.col("dfz") * 1e-6).alias("oz"),
-        F.col("dfx").alias("dx"), F.col("dfy").alias("dy"),
-        F.col("dfz").alias("dz"))
-    h2 = nearest(r2).select(
+    bounced = _cols("df", "xyz")
+    r2 = h1.select("query_id", "dfx", "dfy", "dfz",
+                   *_named(R.nudge(_cols("p", "xyz"), bounced), "ox oy oz"),
+                   *_named(bounced, "dx dy dz"))
+    h2 = _sphere_hits(r2, spheres, "xyz").select(
         "query_id", F.col("obj_id").alias("obj2"), F.col("emit").alias("emit2"))
     out = r2.join(h2, "query_id", "left")
     return out.select(

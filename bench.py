@@ -418,6 +418,11 @@ def run_skew() -> dict:
         "aqe_skewjoin": ("true", fact.join(dim, ["qt_depth", "qt_code"])),
     }
     conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
+    # the hot partition is ~37 MB: under the 256 MB default threshold AQE
+    # never calls it skewed, and it splits a skewed partition into chunks
+    # of the advisory size (64 MB default), so both must sit below it
+    conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16m")
+    conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
     walls = {}
     for i, (name, (aqe, df)) in enumerate(variants.items()):
         conf.set("spark.sql.adaptive.skewJoin.enabled", aqe)
@@ -435,7 +440,7 @@ def run_skew() -> dict:
         "salted_sec": sec["salted"],
         "aqe_skewjoin_sec": sec["aqe_skewjoin"],
         "layers": {name: _fields(stats, i * REPEATS + w.index(min(w)),
-                                 ("task_skew", "shuffle_write_bytes"))
+                                 ("tasks", "task_skew", "shuffle_write_bytes"))
                    for i, (name, w) in enumerate(walls.items())},
     }
 

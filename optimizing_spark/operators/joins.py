@@ -41,7 +41,8 @@
   (cell_x, cell_y) equi-join. ``st_pair_join`` keeps its own 3-D
   half-space offset set, and ``knn_join`` its per-row, grid-clipped
   radius.
-- ``nearest_hit``: O22 — argmin join via min_by (k=1 fast path).
+- ``nearest_hit_xy``: O22 — the k=1 fast path, an adapter over
+  ``raster.nearest_hit`` (the engine's one min_by argmin).
 - ``linear_scan``: O29 — the un-pruned control (plain theta-join).
 
 Scale notes: all joins are equi-joins on integer cell keys (shuffle
@@ -61,6 +62,7 @@ from pyspark.sql import functions as F
 from ..config import Box2
 from ..functions import geometry as G
 from ..functions.cells import grid_cell_sql, neighbor_cells, square_offsets
+from .raster import nearest_hit
 from .tiling import explode_covering_cells
 
 
@@ -850,17 +852,12 @@ def knn_join(
 
 
 def nearest_hit_xy(queries: DataFrame, objects: DataFrame) -> DataFrame:
-    """k=1 fast path (O22 shape): broadcast the queries, min_by over
-    squared distance with obj_id tiebreak."""
-    j = objects.crossJoin(F.broadcast(queries.select(
-        "query_id", F.col("x").alias("qx"), F.col("y").alias("qy"))))
+    """k=1 fast path (O22 shape): ``raster.nearest_hit`` with the
+    queries broadcast and the objects streamed, t = squared distance
+    with obj_id tiebreak. Returns (query_id, obj_id, d2)."""
+    q = queries.select("query_id", F.col("x").alias("qx"), F.col("y").alias("qy"))
     ddx = F.col("x") - F.col("qx")
     ddy = F.col("y") - F.col("qy")
-    j = j.withColumn("d2", ddx * ddx + ddy * ddy)
-    return j.groupBy("query_id").agg(
-        F.min_by(F.struct("d2", "obj_id"), F.struct("d2", "obj_id")).alias("_best")
-    ).select(
-        "query_id",
-        F.col("_best.obj_id").alias("obj_id"),
-        F.col("_best.d2").alias("d2"),
-    )
+    return nearest_hit(objects.select("obj_id", "x", "y"), q,
+                       ddx * ddx + ddy * ddy, "query_id").select(
+        "query_id", "obj_id", F.col("t").alias("d2"))

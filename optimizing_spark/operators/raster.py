@@ -8,21 +8,44 @@ nearest-hit joins and per-pixel raster aggregation.
   semantics of IEEE doubles, matching the reference's C++ behavior).
 - ``ray_sphere_t``: quadratic discriminant nearest positive root
   (Raytracing.hpp:291-348, eps 1e-9 per _EPSILON usage).
-- ``nearest_hit``: O22 — broadcast scene join + min_by argmin
+- ``scene_t``: the sphere / aabb / mixed dispatch of a ray-table row
+  against a scene row, as one t column.
+- ``nearest_hit``: O22 — the one argmin of every ray query
   (Raytracing.hpp:640-669: linear scan keeping min positive t).
+  Contract: ``nearest_hit(probe, other, t, key)`` crosses ``probe``
+  with the broadcast ``other``, drops rows whose ``t`` is NULL (a
+  miss) and keeps, per ``key``, the row of least ``(t, obj_id)`` with
+  every column of both sides plus ``t``. A key with no hit is absent;
+  callers that need misses take a ``left_anti`` of their probe rows
+  against the hits on the key. The argmin is ``min_by`` over a struct,
+  so each task reduces its candidates before the one Exchange; a
+  ``row_number`` window would shuffle every candidate row.
+- The bounce step (compute_radiance, Raytracing.hpp:501-638) as column
+  expressions over 2-D or 3-D axis tuples: ``hit_point`` o + d*t,
+  ``sphere_normal`` (p - c)/r, ``reflect`` d - 2(d.n)n, ``glass``
+  (refraction with Schlick's fresnel and the reflect-or-refract
+  roulette) and ``nudge`` (the bounced origin, 1e-6 along the new
+  direction). ``pathtrace`` and the driver's mirror and glass chain
+  queries share them, so their doubles agree bit for bit.
 - ``render_raster``: O24 — groupBy(px, py) mean of per-sample values
   (Raytracing.hpp:485-492 accumulation).
 - ``tone_map``: O25 — clamp -> pow(1/2.2) -> *255 + 0.5 floor
   (format_color_component, Raytracing.hpp:250-265).
 
-Scale notes: the scene is the broadcast side (a scene is small vs the
-ray table: W*H*samples rows); the nearest-hit join is a broadcast
-nested-loop with a cheap codegen'd predicate — the idiomatic plan when
-|scene| << |rays|. For giant scenes, pre-bucket rays and scene by
-coarse cells (operators.joins.range_join pattern) instead.
+Scale notes: the scene is the broadcast side of the nearest hit (a
+scene is small vs the ray table: W*H*samples rows), so the join is a
+broadcast nested loop with a cheap codegen'd predicate and one
+partial-aggregated Exchange on the key — the idiomatic plan when
+|scene| << |rays|. A query with few probes and many objects
+(``joins.nearest_hit_xy``) broadcasts the probes instead and streams
+the objects. For giant scenes, pre-bucket rays and scene by coarse
+cells (operators.joins.range_join pattern) instead.
 """
 
 from __future__ import annotations
+
+import operator
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -76,46 +99,116 @@ def ray_sphere_t(
     return F.when(disc >= 0, t)
 
 
-def nearest_hit(rays: DataFrame, scene: DataFrame, shape: str = "sphere",
-                eps: float = 1e-9) -> DataFrame:
-    """O22: for each ray, the nearest hit object and distance.
+def scene_t(shape: str = "sphere", eps: float = 1e-9) -> Column:
+    """Hit distance t of a ray-table row (origin_x..z, dir_x..z)
+    against a scene row, NULL on a miss.
 
-    rays: (ray_id, px, py, sample_id, origin_x..z, dir_x..z)
-    scene (sphere): (obj_id, cx, cy, cz, radius)
-    scene (aabb):   (obj_id, min_x..max_z)
-    scene (mixed):  (obj_id, cx, cy, cz, radius, shape) — shape='CUBE'
-    rows are AABBs with min corner (cx,cy,cz) and extent ``radius``
+    scene (sphere): (cx, cy, cz, radius)
+    scene (aabb):   (min_x..max_z)
+    scene (mixed):  (cx, cy, cz, radius, shape) — shape='CUBE' rows are
+    AABBs with min corner (cx,cy,cz) and extent ``radius``
     (SpatialObject.getBoundingBox = BoundaryBox(position, size),
     BoundaryBox.hpp:102-105; the sphere/cube dispatch of
     Raytracing.hpp:291-295), everything else a sphere.
-    Returns (ray_id, px, py, sample_id, obj_id, t); misses are dropped
-    (raycast returns false, Raytracing.hpp:640-669).
     """
     o = (F.col("origin_x"), F.col("origin_y"), F.col("origin_z"))
     d = (F.col("dir_x"), F.col("dir_y"), F.col("dir_z"))
+    if shape not in ("sphere", "mixed"):
+        return ray_aabb_t(o, d,
+                          (F.col("min_x"), F.col("min_y"), F.col("min_z")),
+                          (F.col("max_x"), F.col("max_y"), F.col("max_z")))
+    c = (F.col("cx"), F.col("cy"), F.col("cz"))
+    sph = ray_sphere_t(o, d, c, F.col("radius"), eps=eps)
     if shape == "sphere":
-        t = ray_sphere_t(o, d, (F.col("cx"), F.col("cy"), F.col("cz")),
-                         F.col("radius"), eps=eps)
-    elif shape == "mixed":
-        sph = ray_sphere_t(o, d, (F.col("cx"), F.col("cy"), F.col("cz")),
-                           F.col("radius"), eps=eps)
-        box = ray_aabb_t(
-            o, d,
-            (F.col("cx"), F.col("cy"), F.col("cz")),
-            (F.col("cx") + F.col("radius"), F.col("cy") + F.col("radius"),
-             F.col("cz") + F.col("radius")))
-        t = F.when(F.col("shape") == "CUBE", box).otherwise(sph)
-    else:
-        t = ray_aabb_t(o, d,
-                       (F.col("min_x"), F.col("min_y"), F.col("min_z")),
-                       (F.col("max_x"), F.col("max_y"), F.col("max_z")))
-    j = rays.crossJoin(F.broadcast(scene)).withColumn("t", t).filter(F.col("t").isNotNull())
-    return j.groupBy("ray_id", "px", "py", "sample_id").agg(
-        F.min_by(F.struct("t", "obj_id"), F.struct("t", "obj_id")).alias("_b")
-    ).select(
-        "ray_id", "px", "py", "sample_id",
-        F.col("_b.obj_id").alias("obj_id"), F.col("_b.t").alias("t"),
-    )
+        return sph
+    box = ray_aabb_t(o, d, c, tuple(ci + F.col("radius") for ci in c))
+    return F.when(F.col("shape") == "CUBE", box).otherwise(sph)
+
+
+def nearest_hit(probe: DataFrame, other: DataFrame, t: Column, key: str) -> DataFrame:
+    """O22: per ``key``, the (probe, other) pair of least (t, obj_id)
+    (raycast, Raytracing.hpp:640-669; misses — NULL t — are dropped,
+    as raycast returns false). ``other`` is broadcast; ``t`` is an
+    expression over both sides' columns, whose names must not clash.
+    Returns ``key``, then every other column of the crossed pair and
+    ``t``, one row per key with a hit."""
+    j = probe.crossJoin(F.broadcast(other)).withColumn("t", t) \
+        .filter(F.col("t").isNotNull())
+    rest = [c for c in j.columns if c != key]
+    return j.groupBy(key).agg(
+        F.min_by(F.struct(*rest), F.struct("t", "obj_id")).alias("_b")
+    ).select(key, "_b.*")
+
+
+NUDGE = 1e-6  # a bounced ray leaves its hit point this far along its new direction
+IOR_GLASS = 1.5  # Raytracing.hpp:595
+_R0_GLASS = ((IOR_GLASS - 1.0) ** 2) / ((IOR_GLASS + 1.0) ** 2)  # Schlick r0
+
+
+def _dot(a, b) -> Column:
+    return reduce(operator.add, (x * y for x, y in zip(a, b)))
+
+
+def hit_point(o, d, t: Column) -> tuple:
+    """o + d*t per axis."""
+    return tuple(oi + di * t for oi, di in zip(o, d))
+
+
+def sphere_normal(p, c, r: Column) -> tuple:
+    """Outward unit normal (p - c)/r of a sphere at its surface point p."""
+    return tuple((pi - ci) / r for pi, ci in zip(p, c))
+
+
+def reflect(d, n) -> tuple:
+    """Mirror direction d - 2(d.n)n (Raytracing.hpp:585; the same for
+    either orientation of n)."""
+    dn = _dot(d, n)
+    return tuple(di - 2.0 * dn * ni for di, ni in zip(d, n))
+
+
+def nudge(p, nd) -> tuple:
+    """Origin of the bounced ray: the hit point moved NUDGE along nd."""
+    return tuple(pi + ndi * NUDGE for pi, ndi in zip(p, nd))
+
+
+def glass(frame: DataFrame, d, n, u: Column):
+    """REFRACTION bounce (Raytracing.hpp:588-635), ior 1.5, at a
+    surface of outward normal n hit along direction d: total internal
+    reflection always mirrors with weight 1; otherwise the roulette u <
+    p = 0.25 + 0.5*re (Schlick's re) mirrors with weight re/p, else the
+    ray takes the normalised transmitted direction with weight
+    (1-re)/(1-p). u is a uniform in [0, 1).
+
+    Returns (frame, direction, weight, tir, reflected): ``frame`` gains
+    the scratch columns _ddn, _nnt, _cos2t, _td<axis> and _re, which
+    keep the downstream expressions small; the rest are columns of it
+    (``reflected`` is the roulette's u < p)."""
+    into = _dot(d, n) < 0  # the ray arrives from outside
+    sgn = F.when(into, F.lit(1.0)).otherwise(F.lit(-1.0))
+    frame = frame.withColumns({
+        "_ddn": _dot(d, [ni * sgn for ni in n]),  # d . oriented normal
+        "_nnt": F.when(into, F.lit(1.0 / IOR_GLASS)).otherwise(F.lit(IOR_GLASS)),
+    })
+    ddn, nnt = F.col("_ddn"), F.col("_nnt")
+    frame = frame.withColumn("_cos2t", 1.0 - nnt * nnt * (1.0 - ddn * ddn))
+    cos2t = F.col("_cos2t")
+    tcoef = sgn * (ddn * nnt + F.sqrt(F.greatest(F.lit(0.0), cos2t)))
+    tx = [di * nnt - ni * tcoef for di, ni in zip(d, n)]
+    tlen = F.sqrt(_dot(tx, tx))
+    names = [f"_td{i}" for i in range(len(tx))]
+    frame = frame.withColumns({c: x / tlen for c, x in zip(names, tx)})
+    td = [F.col(c) for c in names]
+    c1 = 1.0 - F.when(into, -ddn).otherwise(_dot(td, n))
+    frame = frame.withColumn(
+        "_re", F.lit(_R0_GLASS) + F.lit(1.0 - _R0_GLASS) * c1 * c1 * c1 * c1 * c1)
+    re = F.col("_re")
+    p = 0.25 + 0.5 * re
+    tir, reflected = cos2t < 0, u < p
+    nd = tuple(F.when(tir | reflected, r).otherwise(t)
+               for r, t in zip(reflect(d, n), td))
+    weight = F.when(tir, F.lit(1.0)).when(reflected, re / p) \
+        .otherwise((1.0 - re) / (1.0 - p))
+    return frame, nd, weight, tir, reflected
 
 
 def render_raster(samples: DataFrame, value_cols: list[str]) -> DataFrame:
@@ -435,9 +528,6 @@ def tone_map(c: Column) -> Column:
     return F.floor(F.pow(clamped, F.lit(GAMMA)) * 255 + 0.5).cast("int")
 
 
-IOR_GLASS = 1.5  # Raytracing.hpp:595
-
-
 def jitter_u(bounce: int, seed: int, stream: int, ray_id: str = "ray_id") -> Column:
     """Deterministic u01 sample per (ray, bounce, stream): hash-derived,
     reproducible under any partitioning (the MT19937 of the reference
@@ -547,10 +637,14 @@ def pathtrace(
         scene = scene.withColumn("material", F.lit("DIFFUSE"))
     if "shape" not in scene.columns:
         scene = scene.withColumn("shape", F.lit("SPHERE"))
+    scene = scene.select("obj_id", "cx", "cy", "cz", "radius", "emit",
+                         "albedo", "material", "shape")
     objs = scene.collect() if inline_scene else None  # tiny by contract
+    o_names = ("origin_x", "origin_y", "origin_z")
+    d_names = ("dir_x", "dir_y", "dir_z")
+    d = tuple(F.col(c) for c in d_names)
     live = rays.select(
-        "ray_id", "px", "py", "sample_id",
-        "origin_x", "origin_y", "origin_z", "dir_x", "dir_y", "dir_z",
+        "ray_id", "px", "py", "sample_id", *o_names, *d_names,
         F.lit(1.0).alias("throughput"),
     )
     done_parts: list[DataFrame] = []
@@ -565,10 +659,7 @@ def pathtrace(
             # the geometry is evaluated exactly once.
             ck = live.withColumn(
                 "_b", _inline_hit_struct(objs, hit_eps)).localCheckpoint()
-            missed = ck.filter(F.col("_b").isNull()).select(
-                "ray_id", "px", "py", "sample_id",
-                F.lit(0.0).alias("radiance"))
-            done_parts.append(missed)
+            missed = ck.filter(F.col("_b").isNull())
             h = ck.filter(F.col("_b").isNotNull()).withColumns({
                 "h_obj": F.col("_b.obj"), "h_t": F.col("_b.t")})
             h = h.withColumns({
@@ -577,21 +668,11 @@ def pathtrace(
                           "material", "shape")
             }).drop("_b")
         else:
-            hit = nearest_hit(live, scene, shape="mixed",
-                              eps=hit_eps).select(
-                "ray_id", F.col("obj_id").alias("h_obj"),
-                F.col("t").alias("h_t"))
-            j = live.join(hit, "ray_id", "left")
-            missed = j.filter(F.col("h_obj").isNull()).select(
-                "ray_id", "px", "py", "sample_id",
-                F.lit(0.0).alias("radiance"))
-            done_parts.append(missed)
-            h = j.filter(F.col("h_obj").isNotNull()).join(
-                F.broadcast(scene.select(
-                    F.col("obj_id").alias("h_obj"), "cx", "cy", "cz",
-                    "radius", "emit", "albedo", "material", "shape")),
-                "h_obj",
-            )
+            h = nearest_hit(live, scene, scene_t("mixed", hit_eps),
+                            "ray_id").withColumnRenamed("t", "h_t")
+            missed = live.join(h, "ray_id", "left_anti")
+        done_parts.append(missed.select(
+            "ray_id", "px", "py", "sample_id", F.lit(0.0).alias("radiance")))
         # emitted light weighted by current throughput
         contrib = h.select(
             "ray_id", "px", "py", "sample_id",
@@ -610,12 +691,11 @@ def pathtrace(
         else:
             alb = F.col("albedo")
 
-        # hit point + outward normal (sphere), materialized as columns
-        h2 = h.withColumns({
-            "_hx": F.col("origin_x") + F.col("dir_x") * F.col("h_t"),
-            "_hy": F.col("origin_y") + F.col("dir_y") * F.col("h_t"),
-            "_hz": F.col("origin_z") + F.col("dir_z") * F.col("h_t"),
-        })
+        # hit point + outward normal, materialized as columns
+        hit = (F.col("_hx"), F.col("_hy"), F.col("_hz"))
+        h2 = h.withColumns(dict(zip(
+            ("_hx", "_hy", "_hz"),
+            hit_point([F.col(c) for c in o_names], d, F.col("h_t")))))
         # outward normal: sphere = radial; CUBE = dominant-axis face
         # normal from the box center (Raytracing.hpp:534-543)
         is_cube = F.col("shape") == "CUBE"
@@ -632,17 +712,15 @@ def pathtrace(
             return F.when(sel, F.when(comp > 0, F.lit(1.0))
                           .otherwise(F.lit(-1.0))).otherwise(F.lit(0.0))
 
+        radial = sphere_normal(
+            hit, (F.col("cx"), F.col("cy"), F.col("cz")), F.col("radius"))
         h2 = h2.withColumns({
-            "_nx": F.when(is_cube, face(x_dom, cdx))
-                    .otherwise((F.col("_hx") - F.col("cx")) / F.col("radius")),
-            "_ny": F.when(is_cube, face(y_dom, cdy))
-                    .otherwise((F.col("_hy") - F.col("cy")) / F.col("radius")),
-            "_nz": F.when(is_cube, face(z_dom, cdz))
-                    .otherwise((F.col("_hz") - F.col("cz")) / F.col("radius")),
+            "_nx": F.when(is_cube, face(x_dom, cdx)).otherwise(radial[0]),
+            "_ny": F.when(is_cube, face(y_dom, cdy)).otherwise(radial[1]),
+            "_nz": F.when(is_cube, face(z_dom, cdz)).otherwise(radial[2]),
         })
-        dot = (F.col("dir_x") * F.col("_nx") + F.col("dir_y") * F.col("_ny")
-               + F.col("dir_z") * F.col("_nz"))
-        h2 = h2.withColumn("_dot", dot)
+        n = (F.col("_nx"), F.col("_ny"), F.col("_nz"))
+        h2 = h2.withColumn("_dot", _dot(d, n))
         # oriented normal nl (faces against the incoming ray, :551)
         flip = F.when(F.col("_dot") < 0, F.lit(1.0)).otherwise(F.lit(-1.0))
         h2 = h2.withColumns({
@@ -676,61 +754,20 @@ def pathtrace(
             "_dfz": F.col("_uz") * F.cos(theta) * rr + vz * F.sin(theta) * rr + F.col("_nlz") * sq,
         })
 
-        # --- SPECULAR: mirror d - 2(d.n)n (:585; sign-invariant in n) ---
-        h2 = h2.withColumns({
-            "_rfx": F.col("dir_x") - 2.0 * F.col("_dot") * F.col("_nx"),
-            "_rfy": F.col("dir_y") - 2.0 * F.col("_dot") * F.col("_ny"),
-            "_rfz": F.col("dir_z") - 2.0 * F.col("_dot") * F.col("_nz"),
-        })
-
-        # --- REFRACTION: glass (:588-635) ---
-        into = F.col("_dot") < 0  # n.dot(nl) > 0  <=>  ray arrives outside
-        nnt = F.when(into, F.lit(1.0 / IOR_GLASS)).otherwise(F.lit(IOR_GLASS))
-        ddn = (F.col("dir_x") * F.col("_nlx") + F.col("dir_y") * F.col("_nly")
-               + F.col("dir_z") * F.col("_nlz"))
-        h2 = h2.withColumn("_nnt", nnt).withColumn("_ddn", ddn)
-        cos2t = 1.0 - F.col("_nnt") * F.col("_nnt") * (1.0 - F.col("_ddn") * F.col("_ddn"))
-        h2 = h2.withColumn("_cos2t", cos2t)
-        tir = F.col("_cos2t") < 0  # total internal reflection
-        sgn = F.when(into, F.lit(1.0)).otherwise(F.lit(-1.0))
-        tcoef = sgn * (F.col("_ddn") * F.col("_nnt") + F.sqrt(F.greatest(F.lit(0.0), F.col("_cos2t"))))
-        tx = F.col("dir_x") * F.col("_nnt") - F.col("_nx") * tcoef
-        ty = F.col("dir_y") * F.col("_nnt") - F.col("_ny") * tcoef
-        tz = F.col("dir_z") * F.col("_nnt") - F.col("_nz") * tcoef
-        tlen = F.sqrt(tx * tx + ty * ty + tz * tz)
-        h2 = h2.withColumns({"_tdx": tx / tlen, "_tdy": ty / tlen, "_tdz": tz / tlen})
-        r0 = ((IOR_GLASS - 1.0) ** 2) / ((IOR_GLASS + 1.0) ** 2)
-        cdot = F.col("_tdx") * F.col("_nx") + F.col("_tdy") * F.col("_ny") + F.col("_tdz") * F.col("_nz")
-        c1 = 1.0 - F.when(into, -F.col("_ddn")).otherwise(cdot)
-        re = F.lit(r0) + F.lit(1.0 - r0) * c1 * c1 * c1 * c1 * c1
-        h2 = h2.withColumn("_re", re)
-        p_refl = 0.25 + 0.5 * F.col("_re")
-        take_refl = tir | (u3 < p_refl)
-        refr_w = F.when(tir, F.lit(1.0)) \
-            .when(u3 < p_refl, F.col("_re") / p_refl) \
-            .otherwise((1.0 - F.col("_re")) / (1.0 - p_refl))
+        # --- SPECULAR (:585) and REFRACTION (:588-635) ---
+        h2, refr_d, refr_w, _, _ = glass(h2, d, n, u3)
 
         # --- material select ---
         is_spec = F.col("material") == "SPECULAR"
         is_refr = F.col("material") == "REFRACTION"
-        ndx = F.when(is_spec, F.col("_rfx")).when(
-            is_refr, F.when(take_refl, F.col("_rfx")).otherwise(F.col("_tdx"))
-        ).otherwise(F.col("_dfx"))
-        ndy = F.when(is_spec, F.col("_rfy")).when(
-            is_refr, F.when(take_refl, F.col("_rfy")).otherwise(F.col("_tdy"))
-        ).otherwise(F.col("_dfy"))
-        ndz = F.when(is_spec, F.col("_rfz")).when(
-            is_refr, F.when(take_refl, F.col("_rfz")).otherwise(F.col("_tdz"))
-        ).otherwise(F.col("_dfz"))
+        nd = tuple(F.when(is_spec, rf).when(is_refr, tr).otherwise(F.col(df))
+                   for rf, tr, df in zip(reflect(d, n), refr_d,
+                                         ("_dfx", "_dfy", "_dfz")))
         weight = F.when(is_refr, alb * refr_w).otherwise(alb)
-
-        eps = 1e-6
         live = h2.select(
             "ray_id", "px", "py", "sample_id",
-            (F.col("_hx") + ndx * eps).alias("origin_x"),
-            (F.col("_hy") + ndy * eps).alias("origin_y"),
-            (F.col("_hz") + ndz * eps).alias("origin_z"),
-            ndx.alias("dir_x"), ndy.alias("dir_y"), ndz.alias("dir_z"),
+            *(c.alias(a) for c, a in zip(nudge(hit, nd), o_names)),
+            *(c.alias(a) for c, a in zip(nd, d_names)),
             (F.col("throughput") * weight).alias("throughput"),
         )
         if not inline_scene:

@@ -167,6 +167,23 @@ def test_nearest_hit_xy(spark):
     assert [int(v) for v in got.obj_id] == [w[0] for w in want]
 
 
+def test_nearest_hit_xy_plan_reduces_before_its_one_exchange(spark):
+    """The argmin is min_by: each task reduces its candidates in a
+    partial aggregate below the plan's only shuffle Exchange, and there
+    is no Window. A row_number argmin would shuffle every candidate."""
+    objs = datagen.spark_table(spark, "quadtree_objects", 1000, partitions=3)
+    qs = spark.createDataFrame([(0, 1.0, 2.0), (1, 3.0, 4.0)],
+                               "query_id long, x double, y double")
+    plan = joins.nearest_hit_xy(qs, objs)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert "Window" not in plan
+    shuffles = [i for i, line in enumerate(plan.splitlines())
+                if "Exchange" in line and "BroadcastExchange" not in line]
+    assert len(shuffles) == 1, plan
+    below = "\n".join(plan.splitlines()[shuffles[0] + 1:])
+    assert "partial_min_by" in below, plan
+
+
 def test_ring_semi_join(spark):
     """3x3 ring membership (WorldPartition.hpp:198-204)."""
     depth = 4

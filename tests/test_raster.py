@@ -25,7 +25,8 @@ def test_nearest_hit_sphere_matches_oracle(spark):
     rays_pd = datagen.rays_pandas(width=16, height=16, samples=2)
     scene_pd = _scene_spheres()
     got = raster.nearest_hit(
-        spark.createDataFrame(rays_pd), spark.createDataFrame(scene_pd), shape="sphere"
+        spark.createDataFrame(rays_pd), spark.createDataFrame(scene_pd),
+        raster.scene_t("sphere"), "ray_id",
     ).toPandas().set_index("ray_id").sort_index()
 
     want = {}
@@ -54,7 +55,8 @@ def test_ray_aabb_matches_oracle(spark):
         "max_x": [70.0, 10.0, 55.0], "max_y": [70.0, 20.0, 55.0], "max_z": [50.0, 0.0, 150.0],
     })
     got = raster.nearest_hit(
-        spark.createDataFrame(rays_pd), spark.createDataFrame(boxes), shape="aabb"
+        spark.createDataFrame(rays_pd), spark.createDataFrame(boxes),
+        raster.scene_t("aabb"), "ray_id",
     ).toPandas().set_index("ray_id").sort_index()
 
     for r in rays_pd.itertuples():
@@ -71,6 +73,25 @@ def test_ray_aabb_matches_oracle(spark):
             assert abs(got.loc[r.ray_id, "t"] - best[0]) < 1e-9
         else:
             assert r.ray_id not in got.index
+
+
+def test_nearest_hit_tie_miss_and_scene_columns(spark):
+    """Planted 1-D scene: ray 0 meets objects 7 and 3 at the same t (the
+    smaller obj_id wins) and object 5 further on; ray 1 meets nothing,
+    so it is absent from the hits and present in the left_anti of the
+    probe rows. The winner's scene columns come through. The objects
+    stream over three partitions, so the tied candidates can sit in
+    different tasks."""
+    objs = spark.createDataFrame(
+        [(7, 5.0, "a"), (5, 9.0, "c"), (3, 5.0, "b")],
+        "obj_id long, at double, tag string").repartition(3)
+    rays = spark.createDataFrame([(0, 0.0), (1, 100.0)], "ray_id long, o double")
+    t = F.when(F.col("at") > F.col("o"), F.col("at") - F.col("o"))
+    hits = raster.nearest_hit(objs, rays, t, "ray_id")
+    assert [r.asDict() for r in hits.collect()] == [
+        {"ray_id": 0, "obj_id": 3, "at": 5.0, "tag": "b", "o": 0.0, "t": 5.0}]
+    missed = rays.join(hits, "ray_id", "left_anti")
+    assert [r.ray_id for r in missed.collect()] == [1]
 
 
 def test_render_and_tonemap(spark):
